@@ -200,6 +200,11 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     while pos + 8 <= len(payload):
         cid = payload[pos : pos + 4]
         size = struct.unpack_from("<I", payload, pos + 4)[0]
+        if pos + 8 + size > len(payload):
+            raise ValueError(
+                f"truncated WAV {cid!r} chunk: {size} bytes declared, "
+                f"{len(payload) - pos - 8} present"
+            )
         body = payload[pos + 8 : pos + 8 + size]
         if cid == b"fmt ":
             fmt = body

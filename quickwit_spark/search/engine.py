@@ -11,10 +11,12 @@ The Spark re-expression of the reference's query lifecycle
      pushdown on (kind, term) — the warmup/prefetch analog), group by
      segment, run the numpy kernel (BM25 + block-max WAND) per segment
      → per-segment top-k,
-  3. driver plan tail: global orderBy(score desc, segment desc, docid
-     desc).limit(k) — the incremental merge_fruits analog — then a
-     broadcast join of the k winners against the docmap for hit
-     materialization (fetch_docs analog).
+  3. driver: one collect of the kernel frame brings each segment's
+     partial hits and exact num_hits (the LeafSearchResponse analog);
+     the driver merges them by (score desc, doc_key desc) — the
+     merge_fruits analog — and fetches the winners' docmap rows in one
+     scan with segment/doc id In filters pushed into the parquet reader
+     (fetch_docs analog).
 
 Two scoring modes:
   parity  f32 + quantized fieldnorms + per-segment stats — reference
@@ -26,6 +28,7 @@ Two scoring modes:
 from __future__ import annotations
 
 import functools
+import heapq
 import json
 import os
 import re as _re
@@ -69,9 +72,13 @@ from quickwit_spark.query.ast import (
 DEFAULT_MAX_EXPANSIONS = 1024
 from quickwit_spark.query.parser import parse_query
 from quickwit_spark.query.tags import extract_tag_filter
-from quickwit_spark.search.kernel import SegmentData, evaluate_segment
+from quickwit_spark.search.kernel import SegmentData, leaf_search
 
 MATCH_SCHEMA = "segment_id string, doc_id long, score double"
+# top-k leaf rows: a segment's partial hits (num_hits null) plus one
+# count row (doc_id and score null) carrying its exact match count —
+# the reference's LeafSearchResponse{num_hits, partial_hits}
+LEAF_SCHEMA = MATCH_SCHEMA + ", num_hits long"
 
 
 def qcol(name: str):
@@ -287,6 +294,19 @@ def _has_phrase(node: QueryAst) -> bool:
     if isinstance(node, Boost):
         return _has_phrase(node.query)
     return False
+
+
+def _count_up_to_batches(seg_ids: list[str], n: int, count_of) -> tuple[int, bool]:
+    """`count_up_to`'s early stop: segments are counted in manifest
+    order in batches of 8 (`count_of(batch)` → hits in that batch) until
+    the running total reaches `n`. → (count, exhausted)."""
+    total = 0
+    batch = 8
+    for i in range(0, len(seg_ids), batch):
+        total += count_of(seg_ids[i : i + batch])
+        if total >= n and i + batch < len(seg_ids):
+            return total, False
+    return total, True
 
 
 def _concurrent_span(fn):
@@ -556,28 +576,6 @@ class IndexSearcher:
 
     def docs(self) -> DataFrame:
         return self._docs
-
-    def _docmap_bytes(self) -> int:
-        """Total docmap file bytes (cached): the fetch-strategy input —
-        one directory walk at first use, not per query."""
-        cached = getattr(self, "_docmap_bytes_cache", None)
-        if cached is None:
-            total = 0
-            # every docmap generation counts: mapping updates write
-            # later generations to docs_uid{g} (builder.docs_path)
-            for entry in os.listdir(self.index_dir):
-                if entry != "docs" and not entry.startswith("docs_uid"):
-                    continue
-                for root, _dirs, files in os.walk(
-                    os.path.join(self.index_dir, entry)
-                ):
-                    for f in files:
-                        try:
-                            total += os.path.getsize(os.path.join(root, f))
-                        except OSError:
-                            pass
-            self._docmap_bytes_cache = cached = total
-        return cached
 
     def _tokenizer_for_field(self):
         fields = {f.name: f.tokenizer for f in self.config.fields}
@@ -1138,18 +1136,25 @@ class IndexSearcher:
         mode: str,
         fast_filter=None,
         use_wand: bool = True,
-        score_cutoff: float | None = None,
+        search_after: tuple | None = None,
     ) -> DataFrame:
-        """Per-segment kernel execution → (segment_id, doc_id, score)."""
+        """Per-segment kernel execution. k=None → every match as
+        (segment_id, doc_id, score). Top-k mode (k given) → LEAF_SCHEMA:
+        ≤ k partial hits per segment (plus ties at the search_after
+        score, which is pushed in as a cutoff) and one count row per
+        segment with its exact match count."""
         tok = self._tokenizer_for_field()
         terms = collect_fulltext_terms(ast, tok)
         gstats = self._global_stats(terms) if mode == "oracle" else None
         tvals = sorted({t for _, t in terms})
         if not tvals and fast_filter is None and isinstance(ast, MatchAll):
             # match-all without filters: answer straight from the docmap
-            return self._seg_pred_filter(self.docs(), seg_ids).select(
-                "segment_id", "doc_id", F.lit(0.0).alias("score")
-            )
+            docs = self._seg_pred_filter(self.docs(), seg_ids)
+            if k is None:
+                return docs.select(
+                    "segment_id", "doc_id", F.lit(0.0).alias("score")
+                )
+            return self._match_all_leaf(docs, k, search_after)
         needs_pos = _has_phrase(ast)
         hot = self._hot_base(tvals, seg_ids, needs_pos)
         if hot is not None:
@@ -1184,21 +1189,42 @@ class IndexSearcher:
         cfg_fields = {f.name: f.tokenizer for f in self.config.fields}
         custom_toks = self.config.tokenizers
         k1, b = self.config.k1, self.config.b
+        score_cutoff = search_after[0] if search_after is not None else None
+        topk = k is not None
+        schema = LEAF_SCHEMA if topk else MATCH_SCHEMA
 
         def make_eval(with_allowed: bool):
+            def out(segment_id, docids, scores, num_hits):
+                cols = {
+                    "segment_id": segment_id,
+                    "doc_id": docids.astype(np.int64),
+                    "score": scores.astype(np.float64),
+                }
+                if not topk:
+                    return pd.DataFrame(cols)
+                # the segment's count row goes last, null doc_id/score
+                n = len(docids)
+                return pd.DataFrame(
+                    {
+                        "segment_id": segment_id,
+                        "doc_id": pd.array([*cols["doc_id"], None], "Int64"),
+                        "score": pd.array([*cols["score"], None], "Float64"),
+                        "num_hits": pd.array([None] * n + [num_hits], "Int64"),
+                    }
+                )
+
             def run(seg_pdf: pd.DataFrame, allowed_pdf: pd.DataFrame | None):
+                empty = np.zeros(0, np.int64)
                 if len(seg_pdf) == 0:
-                    return pd.DataFrame({"segment_id": [], "doc_id": [], "score": []})
+                    return out("", empty, empty, 0).iloc[:0]
                 segment_id = seg_pdf["segment_id"].iloc[0]
-                seg = SegmentData.from_rows(segment_id, seg_pdf.to_dict("records"))
                 allowed = None
                 if with_allowed:
                     if allowed_pdf is None or len(allowed_pdf) == 0:
-                        return pd.DataFrame(
-                            {"segment_id": [], "doc_id": [], "score": []}
-                        )
+                        return out(segment_id, empty, empty, 0)
                     allowed = allowed_pdf["doc_id"].to_numpy(np.int64)
-                docids, scores = evaluate_segment(
+                seg = SegmentData.from_rows(segment_id, seg_pdf.to_dict("records"))
+                docids, scores, num_hits = leaf_search(
                     seg,
                     ast,
                     lambda f: resolve_tokenizer(
@@ -1213,13 +1239,7 @@ class IndexSearcher:
                     use_wand=use_wand,
                     score_cutoff=score_cutoff,
                 )
-                return pd.DataFrame(
-                    {
-                        "segment_id": segment_id,
-                        "doc_id": docids.astype(np.int64),
-                        "score": scores.astype(np.float64),
-                    }
-                )
+                return out(segment_id, docids, scores, num_hits)
 
             return run
 
@@ -1263,13 +1283,39 @@ class IndexSearcher:
                         "segment_id"
                     )
                 )
-                .applyInPandas(lambda l, r: fn(l, r), MATCH_SCHEMA)
+                .applyInPandas(lambda l, r: fn(l, r), schema)
             )
         fn = make_eval(False)
         return (
             inv.repartition(kparts, "segment_id")
             .groupBy("segment_id")
-            .applyInPandas(lambda pdf: fn(pdf, None), MATCH_SCHEMA)
+            .applyInPandas(lambda pdf: fn(pdf, None), schema)
+        )
+
+    @staticmethod
+    def _match_all_leaf(docs: DataFrame, k: int, search_after) -> DataFrame:
+        """Top-k leaf rows of an unfiltered match-all: every score is 0,
+        so rank order is doc_key desc — the search_after cursor and the
+        per-segment top-k both apply on the docmap rows themselves, and
+        the partial hits stay ≤ k per segment even when paginating.
+        No count rows: the manifest holds the exact counts."""
+        if search_after is not None:
+            sa_score = search_after[0]
+            sa_key = search_after[1] if len(search_after) > 1 else None
+            if sa_score == 0.0 and sa_key is not None:
+                docs = docs.filter(F.col("doc_key") < sa_key)
+            elif not sa_score > 0.0:
+                docs = docs.limit(0)
+        wseg = Window.partitionBy("segment_id").orderBy(F.col("doc_key").desc())
+        return (
+            docs.withColumn("_mr", F.row_number().over(wseg))
+            .filter(F.col("_mr") <= k)
+            .select(
+                "segment_id",
+                F.col("doc_id").cast("long").alias("doc_id"),
+                F.lit(0.0).alias("score"),
+                F.lit(None).cast("long").alias("num_hits"),
+            )
         )
 
     def _ast_time_bounds(self, ast) -> tuple[int | None, int | None]:
@@ -1412,17 +1458,13 @@ class IndexSearcher:
         resolved = (
             _resolved if _resolved is not None else self._resolve(query, time_range)
         )
-        _ast, _ff, seg_ids = resolved
-        total = 0
-        batch = 8
-        for i in range(0, len(seg_ids), batch):
-            total += self.count(
-                query, time_range, segments=seg_ids[i : i + batch],
-                _resolved=resolved,
-            )
-            if total >= n and i + batch < len(seg_ids):
-                return total, False
-        return total, True
+        return _count_up_to_batches(
+            resolved[2],
+            n,
+            lambda segs: self.count(
+                query, time_range, segments=segs, _resolved=resolved
+            ),
+        )
 
     @_concurrent_span
     def sort_by_field(
@@ -1550,6 +1592,154 @@ class IndexSearcher:
             *(["segment_id"] if self._multi_gen else []),
         )
 
+    # partial hits up to this many are fetched through a doc_id In
+    # list pushed into the docmap scan; past it the list bloats plan
+    # analysis, so the pairs are broadcast into a semi join instead
+    _FETCH_IN_MAX = 4096
+
+    def _hit_cols(self, fetch, snippet_fields) -> tuple[list[str], list[str]]:
+        """(fetch columns, fetch + snippet source columns) of a score
+        search. ES `_source`/fetch is a FILTER over the stored doc:
+        unknown fields are silently absent from the hit (reference
+        filter_source, `rest_handler.rs:674-742`), never an error.
+        Snippet fields DO validate — the reference 400s "the snippet
+        field `x` must be stored" (`root.rs:313-335`)."""
+        doc_cols = set(self.docs().columns)
+        # doc_key is always selected positionally — fetching it again
+        # would duplicate the column (same guard as sort_by_field)
+        fetch_cols = list(
+            dict.fromkeys(
+                c
+                for c in (fetch or [])
+                if c != "doc_key" and self._fcol(c) in doc_cols
+            )
+        )
+        bad = [c for c in snippet_fields if self._fcol(c) not in doc_cols]
+        if bad:
+            raise ValueError(
+                f"snippet field(s) not stored in the docmap: {bad}"
+            )
+        raw_cols = fetch_cols + [c for c in snippet_fields if c not in fetch_cols]
+        return fetch_cols, raw_cols
+
+    def _fetch_frame(self, cols, seg_set=None, doc_ids=None) -> DataFrame:
+        """The winner-fetch scan (fetch_docs analog): docmap rows
+        (segment_id, doc_id, doc_key, *cols), with the partial hits'
+        segment ids and doc ids pushed into the parquet reader as In
+        filters (row-group pruning; the docmap is never shuffled)."""
+        docs = self.docs().select(
+            "segment_id", "doc_id", "doc_key",
+            *[qcol(self._fcol(c)).alias(c) for c in cols],
+        )
+        if seg_set is not None:
+            docs = self._seg_pred_filter(docs, seg_set)
+        if doc_ids is not None:
+            docs = docs.filter(F.col("doc_id").isin(doc_ids))
+        return docs
+
+    def _fetch(self, cols, keys) -> dict:
+        """{(segment_id, doc_id): docmap row} for the (segment_id,
+        doc_id) pairs `keys`, in one scan."""
+        if not keys:
+            return {}
+        seg_set = sorted({s for s, _ in keys})
+        if len(keys) <= self._FETCH_IN_MAX:
+            frame = self._fetch_frame(cols, seg_set, sorted({d for _, d in keys}))
+        else:
+            pairs = self.spark.createDataFrame(
+                list(keys), "segment_id string, doc_id long"
+            )
+            frame = self._fetch_frame(cols, seg_set).join(
+                F.broadcast(pairs), ["segment_id", "doc_id"], "left_semi"
+            )
+        return {(r["segment_id"], r["doc_id"]): r for r in frame.collect()}
+
+    def _topk(
+        self,
+        resolved: tuple,
+        k: int,
+        mode: str = "parity",
+        search_after: tuple | None = None,
+        cols=(),
+        use_wand: bool = True,
+    ) -> tuple[list[dict], dict]:
+        """Top-k by BM25 as one leaf→root pass (reference leaf search,
+        root merge and fetch_docs; SURVEY §3.1 steps 5-7):
+
+          leaf   ONE collect of the kernel frame: per segment ≤ k partial
+                 hits (plus ties at the search_after score) and the exact
+                 num_hits, counted before the cursor and the top-k cut;
+          root   the driver merges the partial hits by (score desc,
+                 doc_key desc), applying the cursor;
+          fetch  one docmap scan for the candidates that can still win.
+
+        → (hits, counts): ≤ k hit dicts in rank order with doc_key,
+        score, rank, *cols (+ segment_id after a doc-mapping update),
+        and {segment_id: num_hits} over the searched segments."""
+        ast, fast_filter, seg_ids = resolved
+        leaf = self._matches(
+            ast, seg_ids, k, mode, fast_filter, use_wand, search_after
+        )
+        if mode == "oracle":
+            leaf = leaf.withColumn("score", F.round(F.col("score"), 9))
+        counts: dict[str, int] = {}
+        partial = []
+        for r in leaf.collect():
+            if r["doc_id"] is None:
+                counts[r["segment_id"]] = r["num_hits"]
+            else:
+                partial.append((r["score"], r["segment_id"], r["doc_id"]))
+        if isinstance(ast, MatchAll) and fast_filter is None:
+            keep = set(seg_ids)
+            counts = {
+                s.segment_id: s.num_docs
+                for s in self.segments
+                if s.segment_id in keep
+            }
+        sa_score = sa_key = None
+        if search_after is not None:
+            # strictly after the cursor. The kernel's cutoff is
+            # permissive (oracle margin), so the score test is redone
+            # here; a tie at the cursor score needs the doc_key, which
+            # only the fetch brings — a values-only cursor skips ties.
+            sa_score = search_after[0]
+            sa_key = search_after[1] if len(search_after) > 1 else None
+            partial = [
+                p for p in partial
+                if p[0] < sa_score or (sa_key is not None and p[0] == sa_score)
+            ]
+        # only docs scoring at least the k-th best SURE candidate can
+        # win; candidates tied at the cursor score may still fail the
+        # doc_key test, so they never set the bar
+        sure = [p[0] for p in partial if sa_score is None or p[0] < sa_score]
+        if 0 < k <= len(sure):
+            theta = heapq.nlargest(k, sure)[-1]
+            partial = [p for p in partial if p[0] >= theta]
+        rows = self._fetch(cols, [(sid, did) for _, sid, did in partial])
+        hits = []
+        for score, sid, did in partial:
+            r = rows.get((sid, did))
+            if r is None:
+                continue  # no docmap row: an inner join would drop it too
+            key = r["doc_key"]
+            if sa_score is not None and score == sa_score and (
+                key is None or not key < sa_key
+            ):
+                continue
+            hit = {"doc_key": key, "score": score}
+            hit.update((c, r[c]) for c in cols)
+            if self._multi_gen:
+                hit["segment_id"] = sid
+            hits.append(hit)
+        hits.sort(
+            key=lambda h: (h["score"], h["doc_key"] is not None, h["doc_key"]),
+            reverse=True,
+        )
+        hits = hits[: max(k, 0)]
+        for rank, h in enumerate(hits, 1):
+            h["rank"] = rank
+        return hits, counts
+
     @_concurrent_span
     def search(
         self,
@@ -1567,159 +1757,63 @@ class IndexSearcher:
         """Top-k by BM25 desc → (doc_key, score, rank [, fetch cols]
         [, snippet_<field> cols]).
 
+        Runs the one-pass `_topk` core eagerly and wraps its ≤ k driver
+        rows in a DataFrame.
+
         `search_after=(score, doc_key)` returns hits strictly after the
         cursor in rank order (reference pagination,
         `search.proto:240-243`). The cursor's score is PUSHED INTO the
         per-segment kernel as a cutoff (docs above it are pruned and
         per-segment top-k still applies), so a paginated hot-term query
-        broadcasts ≤ (k + cutoff-ties) × segments winner rows — never
+        collects ≤ (k + cutoff-ties) × segments partial hits — never
         the full match set.
 
         `snippet_fields` adds highlighted best-fragment columns for the
         k winners (reference `fetch_docs.rs:41-167`); each named field
         must be in the index's stored_columns. `_resolved` lets internal
-        callers (search_plan) reuse an already-resolved plan so pattern
-        expansion doesn't run twice.
+        callers reuse an already-resolved plan so pattern expansion
+        doesn't run twice.
         """
-        ast, fast_filter, seg_ids = (
+        from pyspark.sql import types as T
+
+        resolved = (
             _resolved if _resolved is not None else self._resolve(query, time_range)
         )
-        score_cutoff = search_after[0] if search_after is not None else None
-        matches = self._matches(
-            ast, seg_ids, k, mode, fast_filter, use_wand, score_cutoff
-        )
-        if mode == "oracle":
-            matches = matches.withColumn("score", F.round(F.col("score"), 9))
-        bounded = True
-        if isinstance(ast, MatchAll) and fast_filter is None:
-            # the match-all fast path returns EVERY docmap row — truncate
-            # per segment before the join (scores are all 0, so global
-            # order is doc_key desc == per-segment doc_id desc) instead
-            # of broadcasting the whole index
-            if k is not None and search_after is None:
-                wseg = Window.partitionBy("segment_id").orderBy(
-                    F.col("doc_id").desc()
-                )
-                matches = (
-                    matches.withColumn("_mr", F.row_number().over(wseg))
-                    .filter(F.col("_mr") <= k)
-                    .drop("_mr")
-                )
-            else:
-                bounded = False
         snippet_fields = list(snippet_fields or [])
-        # doc_key is always selected positionally — fetching it again
-        # would duplicate the column (same guard as sort_by_field)
-        doc_cols = set(self.docs().columns)
-        # ES `_source`/fetch is a FILTER over the stored doc: unknown
-        # fields are silently absent from the hit (reference
-        # filter_source, `rest_handler.rs:674-742`), never an error —
-        # and never an AnalysisException from selecting a missing column
-        fetch_cols = list(
-            dict.fromkeys(
-                c
-                for c in (fetch or [])
-                if c != "doc_key" and self._fcol(c) in doc_cols
-            )
+        fetch_cols, raw_cols = self._hit_cols(fetch, snippet_fields)
+        hits, _counts = self._topk(
+            resolved, k, mode, search_after, raw_cols, use_wand
         )
-        raw_cols = fetch_cols + [c for c in snippet_fields if c not in fetch_cols]
-        bad = [c for c in snippet_fields if self._fcol(c) not in doc_cols]
-        if bad:
-            # snippet fields DO validate — the reference 400s "the
-            # snippet field `x` must be stored"
-            # (`root.rs:313-335` validate_requested_snippet_fields)
-            raise ValueError(
-                f"snippet field(s) not stored in the docmap: {bad}"
-            )
-        docs = self.docs().select(
-            "segment_id", "doc_id", "doc_key",
-            *[qcol(self._fcol(c)).alias(c) for c in raw_cols],
+        gen = ["segment_id"] if self._multi_gen else []
+        fields = {f.name: f for f in self._fetch_frame(raw_cols).schema}
+        schema = T.StructType(
+            [
+                fields["doc_key"],
+                T.StructField("score", T.DoubleType()),
+                T.StructField("rank", T.IntegerType()),
+                *[fields[c] for c in raw_cols + gen],
+            ]
         )
-        # winners are ≤ k×segments (+ cutoff ties) rows. A plain
-        # broadcast join would still SCAN the ENTIRE docmap to probe the
-        # hash table (at 20 M docs that scan alone costs more than the
-        # kernel), so for bounded match sets the winners are collected —
-        # the same materialization broadcast would do, one job earlier —
-        # and their segment/doc ids are pushed INTO the docmap parquet
-        # scan as In predicates (row-group pruning); the join against
-        # the re-created winner rows then restores exact (segment_id,
-        # doc_id) pairing + scores. Falls back to the broadcast join
-        # when the winner set is too large for literal pushdown (plan
-        # bloat) or unbounded (match-all).
-        # size-aware: the collect adds one extra Spark job per query
-        # (~0.3 s on this host), which only pays off once the docmap is
-        # big enough that the full-scan probe costs more — below the
-        # threshold the classic single-job broadcast join wins
-        win_rows = None
-        if bounded and self._docmap_bytes() >= int(
-            os.environ.get("QWS_FETCH_PUSHDOWN_MIN_BYTES", str(128 << 20))
-        ):
-            win_rows = matches.collect()
-        if win_rows is not None:
-            # kernel already ran during the collect — NEVER join against
-            # `matches` here, that would re-execute it; the collected
-            # rows are the winner set in every branch
-            win_df = self.spark.createDataFrame(win_rows, matches.schema)
-            if 0 < len(win_rows) <= 4096:
-                seg_set = sorted({r["segment_id"] for r in win_rows})
-                id_set = sorted({r["doc_id"] for r in win_rows})
-                docs = docs.filter(
-                    F.col("segment_id").isin(seg_set)
-                    & F.col("doc_id").isin(id_set)
-                )
-            # oversized winner sets skip the In pushdown (plan bloat)
-            # but still broadcast the materialized rows
-            hits = docs.join(
-                F.broadcast(win_df), ["segment_id", "doc_id"], "inner"
-            )
-        else:
-            hits = docs.join(
-                F.broadcast(matches) if bounded else matches,
-                ["segment_id", "doc_id"],
-                "inner",
-            )
-        if search_after is not None:
-            if len(search_after) == 1:
-                # values-only ES cursor: strictly-after on score alone;
-                # same-score ties are skipped (no doc tiebreak value)
-                sa_score, sa_key = search_after[0], None
-            else:
-                sa_score, sa_key = search_after
-            cond = F.col("score") < sa_score
-            if sa_key is not None:
-                cond = cond | (
-                    (F.col("score") == sa_score) & (F.col("doc_key") < sa_key)
-                )
-            hits = hits.filter(cond)
-        order = [F.col("score").desc(), F.col("doc_key").desc()]
-        hits = hits.orderBy(*order).limit(k)
-        # rank runs on the <= k winner rows — WindowExec's global-
-        # window warning here is about a plan that never exceeds k rows
-        w = Window.orderBy(*order)
-        hits = hits.select(
-            "doc_key",
-            "score",
-            F.row_number().over(w).alias("rank"),
-            *[qcol(c) for c in raw_cols],
-            *(["segment_id"] if self._multi_gen else []),
+        names = schema.fieldNames()
+        out = self.spark.createDataFrame(
+            [tuple(h[c] for c in names) for h in hits], schema
         )
         if snippet_fields:
             from quickwit_spark.search.snippets import attach_snippets
 
             tok = self._tokenizer_for_field()
             per_field: dict[str, set[str]] = {}
-            for fld, t in collect_fulltext_terms(ast, tok):
+            for fld, t in collect_fulltext_terms(resolved[0], tok):
                 per_field.setdefault(fld, set()).add(t)
-            hits = attach_snippets(
-                hits, snippet_fields, per_field, snippet_max_chars
+            out = attach_snippets(
+                out, snippet_fields, per_field, snippet_max_chars
             )
-            keep = [c for c in raw_cols if c in fetch_cols]
-            hits = hits.select(
-                "doc_key", "score", "rank", *[qcol(c) for c in keep],
+            out = out.select(
+                "doc_key", "score", "rank", *[qcol(c) for c in fetch_cols],
                 *[qcol(f"snippet_{f}") for f in snippet_fields],
-                *(["segment_id"] if self._multi_gen else []),
+                *gen,
             )
-        return hits
+        return out
 
     # ---------- split-order early termination (leaf.rs:958-1100) ----------
 
@@ -1848,6 +1942,14 @@ class IndexSearcher:
             bounds[sid] = b
         return bounds
 
+    @staticmethod
+    def _leaf_hits(leaf: DataFrame) -> DataFrame:
+        """The partial-hit rows of a top-k leaf frame, count rows
+        dropped → (segment_id, doc_id, score)."""
+        return leaf.filter(F.col("doc_id").isNotNull()).select(
+            "segment_id", "doc_id", "score"
+        )
+
     @_concurrent_span
     def search_early(
         self,
@@ -1907,7 +2009,9 @@ class IndexSearcher:
         prev = getattr(self, "_early_m1", None)
         if prev is not None:
             prev.unpersist()
-        self._early_m1 = m1 = self._matches(ast, phase1, k, mode, fast_filter).persist()
+        self._early_m1 = m1 = self._leaf_hits(
+            self._matches(ast, phase1, k, mode, fast_filter)
+        ).persist()
         w1 = m1.orderBy(F.col("score").desc()).limit(k).collect()
         theta = min((r["score"] for r in w1), default=None) if len(w1) >= k else None
         if theta is None or theta <= 0.0:
@@ -1926,7 +2030,7 @@ class IndexSearcher:
         matches = m1
         if phase2:
             matches = matches.unionByName(
-                self._matches(ast, phase2, k, mode, fast_filter)
+                self._leaf_hits(self._matches(ast, phase2, k, mode, fast_filter))
             )
         if mode == "oracle":
             matches = matches.withColumn("score", F.round(F.col("score"), 9))
@@ -2019,7 +2123,8 @@ class IndexSearcher:
         (`quickwit-search/src/root.rs:1243-1330`): the resolved AST,
         the segments kept after manifest pruning, the posting terms the
         plan will touch (warmup set), and Spark's formatted physical
-        plan for the top-k query. `early_terminate=True` additionally
+        plans of the top-k query's two scans (leaf kernel frame and
+        winner fetch), explained without running them. `early_terminate=True` additionally
         runs the split-order triage (phase-1 probe + θ) and reports
         which segments the bound PROVES losers (demoted to
         count-only/skip — the `CanSplitDoBetter` evidence)."""
@@ -2041,16 +2146,20 @@ class IndexSearcher:
         tag_filter = extract_tag_filter(
             pre_expand, lambda field, text: tok(field)(text)
         )
-        df = self.search(
-            query, k=k, time_range=time_range,
-            _resolved=(ast, fast_filter, seg_ids),
-        )
         import contextlib
         import io
 
+        # the two plans a top-k runs, built but not executed: the leaf
+        # kernel frame, then the winner fetch (whose doc_id In list is
+        # bound to the kernel's partial hits at run time)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
+            print("== leaf kernel: partial hits + num_hits per segment ==")
+            self._matches(ast, seg_ids, k, "parity", fast_filter).explain(
+                "formatted"
+            )
+            print("== winner fetch: docmap scan of the merged partial hits ==")
+            self._fetch_frame([], seg_ids).explain("formatted")
         early = {}
         if early_terminate:
             et = self.search_early(
@@ -2083,6 +2192,15 @@ class IndexSearcher:
         rest handler surface, `elastic_search_api`). Returns
         {"hits": DataFrame (absent when size=0),
          "aggregations": {name: DataFrame}}."""
+        return self._es_search(body, mode)[0]
+
+    def _es_search(
+        self, body: dict, mode: str = "parity", driver_rows: bool = False
+    ) -> tuple[dict, tuple, dict | None]:
+        """`es_search` → (out, resolved, counts). With `driver_rows`, a
+        BM25-sorted body's hits stay the `_topk` core's driver rows (a
+        list of dicts) and `counts` is that pass's {segment_id:
+        num_hits}; otherwise counts is None."""
         from quickwit_spark.query.es_dsl import from_es_body
         from quickwit_spark.search import aggs as _aggs
         from quickwit_spark.search.es_aggs import run_es_aggs
@@ -2096,6 +2214,7 @@ class IndexSearcher:
             known_fields=self._known_fields(),
         )
         out: dict = {}
+        counts = None
         size = _es_uint(body, "size", 10)
         # `from` pagination (reference start_offset,
         # `rest_handler.rs:359`): rank [from, from+size) — fetch
@@ -2166,18 +2285,29 @@ class IndexSearcher:
                         "invalid search_after field value, expect bool, "
                         "number or string"
                     )
-            out["hits"] = self.search(
-                ast,
-                k=k_total,
-                mode=mode,
-                search_after=tuple(sa) if sa else None,
-                fetch=fetch,
-                _resolved=resolved,
-            )
+            sa = tuple(sa) if sa else None
+            if driver_rows:
+                out["hits"], counts = self._topk(
+                    resolved, k_total, mode, sa, self._hit_cols(fetch, [])[0]
+                )
+            else:
+                out["hits"] = self.search(
+                    ast,
+                    k=k_total,
+                    mode=mode,
+                    search_after=sa,
+                    fetch=fetch,
+                    _resolved=resolved,
+                )
         if size > 0 and start_offset:
-            out["hits"] = out["hits"].filter(
-                F.col("rank") > start_offset
-            )
+            if isinstance(out["hits"], list):
+                out["hits"] = [
+                    h for h in out["hits"] if h["rank"] > start_offset
+                ]
+            else:
+                out["hits"] = out["hits"].filter(
+                    F.col("rank") > start_offset
+                )
         agg_body = body.get("aggs") or body.get("aggregations")
         if agg_body:
             m = self.docs().join(
@@ -2189,7 +2319,7 @@ class IndexSearcher:
             )
             m, agg_body = self._agg_frame_and_body(m, agg_body)
             out["aggregations"] = run_es_aggs(m, agg_body)
-        return out
+        return out, resolved, counts
 
     def _agg_frame_and_body(self, m: DataFrame, agg_body: dict):
         """Resolve dot-path agg fields against the dynamic doc mapping:
@@ -2325,8 +2455,9 @@ class IndexSearcher:
 
         t0 = _time.perf_counter()
         src_cols = body.get("_source") or []
-        inner = dict(body)
-        raw = self.es_search(inner, mode=mode)
+        raw, resolved, counts = self._es_search(
+            dict(body), mode=mode, driver_rows=True
+        )
         sort_spec = body.get("sort")
         field_sort = bool(sort_spec) and not self._is_score_sort(sort_spec)
         specs_full = self._parse_es_sort_full(sort_spec) if field_sort else []
@@ -2336,9 +2467,10 @@ class IndexSearcher:
             # es_search already fetched the _source columns through the
             # body's own sort/search_after path — no re-run (a plain
             # re-search here would silently drop the body's sort).
-            hdf = raw["hits"]
-            for r in hdf.collect():
-                d = r.asDict()
+            hits = raw["hits"]
+            if not isinstance(hits, list):
+                hits = [r.asDict() for r in hits.collect()]
+            for d in hits:
                 score = d.get("score")
                 if max_score is None or (score is not None and score > max_score):
                     max_score = score
@@ -2401,18 +2533,22 @@ class IndexSearcher:
         count_all = tth is True or (
             isinstance(tth, int) and not isinstance(tth, bool) and tth > size
         )
-        # resolve the body's AST ONCE for the counting pass —
-        # re-resolving would re-run wildcard/regex expansion jobs.
-        # `false` takes the same Underestimate path as absent — the
-        # reference maps Track(false) to CountHits::Underestimate, not
-        # to a no-count response.
-        count_ast = self._es_ast(body)
-        count_resolved = self._resolve(count_ast, None)
+        # the count reuses the hits pass's resolved AST — re-resolving
+        # would re-run wildcard/regex expansion jobs. A BM25-sorted
+        # page already counted every searched segment in its kernel
+        # pass (`counts`); field-sorted and size-0 bodies count through
+        # `count` / `count_up_to`. `false` takes the same Underestimate
+        # path as absent — the reference maps Track(false) to
+        # CountHits::Underestimate, not to a no-count response.
+        seg_ids = resolved[2]
+        if counts is not None:
+            count_of = lambda segs: sum(counts.get(s, 0) for s in segs)  # noqa: E731
+        else:
+            count_of = lambda segs: self.count(  # noqa: E731
+                None, segments=segs, _resolved=resolved
+            )
         if count_all:
-            total = {
-                "value": self.count(count_ast, _resolved=count_resolved),
-                "relation": "eq",
-            }
+            total = {"value": count_of(seg_ids), "relation": "eq"}
         else:
             n = (
                 tth
@@ -2428,9 +2564,8 @@ class IndexSearcher:
                 if hits_rows
                 else 0
             )
-            v, exhausted = self.count_up_to(
-                count_ast, max(n, served, 1),
-                _resolved=count_resolved,
+            v, exhausted = _count_up_to_batches(
+                seg_ids, max(n, served, 1), count_of
             )
             total = {"value": v, "relation": "eq" if exhausted else "gte"}
         out = {

@@ -953,7 +953,7 @@ def _one_agg(df: DataFrame, clause: dict) -> DataFrame:
     )
 
 
-def _validate_aggs(cols: set | None, aggs: dict) -> None:
+def _validate_aggs(cols: dict | None, aggs: dict) -> None:
     """Reject malformed agg bodies BEFORE any `.items()` walk or Column
     construction: a non-object body, unknown/non-string field, a
     non-positive (date_)histogram interval, empty/non-numeric `ranges`
@@ -963,9 +963,13 @@ def _validate_aggs(cols: set | None, aggs: dict) -> None:
     the wire layer converts to ES 400 envelopes. The reference's
     tantivy aggregations error on each of these at request parse time.
 
-    `cols=None` skips the field-existence check only: the engine path
-    resolves fields itself (unmapped → all-null literal, ES empty-bucket
-    semantics), so it validates SHAPE here and existence never fails."""
+    `cols` maps each column to its Spark type name: a (date_)histogram
+    over a string column is rejected here (its bucket key arithmetic
+    would fail inside the Spark job with CAST_INVALID_INPUT).
+    `cols=None` skips the field-existence and type checks: the engine
+    path resolves fields itself (unmapped → all-null literal, ES
+    empty-bucket semantics), so it validates SHAPE here and existence
+    never fails; `run_es_aggs` checks the resolved columns' types."""
     if not isinstance(aggs, dict):
         raise ValueError("aggs must be an object")
     for name, clause in aggs.items():
@@ -984,6 +988,15 @@ def _validate_aggs(cols: set | None, aggs: dict) -> None:
                 if cols is not None and f not in cols:
                     raise ValueError(
                         f"aggregation field {f!r} does not exist in the index"
+                    )
+                if (
+                    cols is not None
+                    and kind in ("histogram", "date_histogram")
+                    and cols[f] == "string"
+                ):
+                    raise ValueError(
+                        f"{kind} aggregation needs a numeric or date field, "
+                        f"{f!r} is a string"
                     )
             if kind == "histogram":
                 if not float(spec.get("interval", 0)) > 0:
@@ -1021,7 +1034,7 @@ def _validate_aggs(cols: set | None, aggs: dict) -> None:
 def run_es_aggs(df: DataFrame, aggs: dict) -> dict[str, DataFrame]:
     """`df` = matches joined to fast fields (`aggs.matches`); `aggs` =
     the ES `aggs` body. → {agg name: result DataFrame}."""
-    _validate_aggs(set(df.columns), aggs)
+    _validate_aggs(dict(df.dtypes), aggs)
     return {name: _one_agg(df, clause) for name, clause in aggs.items()}
 
 

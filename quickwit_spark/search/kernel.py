@@ -3,7 +3,8 @@
 This is the leaf-search analog of the reference
 (`quickwit-search/src/leaf.rs:437-560`): one segment's posting lists +
 fieldnorms + stats in memory, one QueryAst, out come the matching
-docids and BM25 scores (already top-k-truncated when k is given).
+docids and BM25 scores (already top-k-truncated when k is given) and
+the segment's exact match count (`leaf_search`).
 
 Boolean algebra runs on dense masks over the segment's docid space
 (segments are bounded — the reference targets 10M docs/split — so a
@@ -542,10 +543,13 @@ def _phrase_counts_glob(glob: list[np.ndarray], cand, slop: int) -> np.ndarray:
 def _wand_candidates(ctx: _Ctx, terms, k: int):
     """Two-pass block-max pruning for a pure disjunction (parity mode).
 
-    Returns (docids, exact_scores) for a SUPERSET of the true top-k.
+    Returns (docids, exact_scores, num_hits): the docids are a SUPERSET
+    of the true top-k, num_hits the exact number of matching docs (every
+    doc in some posting list, counted before pruning).
     """
     N = ctx.seg.num_docs
     ub = np.zeros(N, np.float32)
+    hit = np.zeros(N, bool)
     per_term = []
     for f, t in terms:
         entry = ctx.seg.postings.get((f, t))
@@ -555,6 +559,7 @@ def _wand_candidates(ctx: _Ctx, terms, k: int):
         n, _ = ctx.field_stats(f)
         w = bm25_weight(len(docids), n, 1.0, np.float32, k1=ctx.k1)
         per_term.append((f, t, docids, w))
+        hit[docids] = True
         # block bound per posting: expand block_max to posting granularity
         nb = len(block_max)
         reps = np.full(nb, BLOCK_SIZE, np.int64)
@@ -562,9 +567,9 @@ def _wand_candidates(ctx: _Ctx, terms, k: int):
             reps[-1] = len(docids) - BLOCK_SIZE * (nb - 1)
         bounds = np.repeat(block_max * w, reps)
         np.add.at(ub, docids, bounds)
-    cand = np.flatnonzero(ub > 0)
+    cand = np.flatnonzero(hit)
     if len(cand) == 0:
-        return np.zeros(0, np.uint32), np.zeros(0, np.float32)
+        return np.zeros(0, np.uint32), np.zeros(0, np.float32), 0
 
     def exact(doc_subset_mask):
         scores = np.zeros(N, np.float32)
@@ -577,10 +582,8 @@ def _wand_candidates(ctx: _Ctx, terms, k: int):
         return scores
 
     if len(cand) <= max(4 * k, 64):
-        m = np.zeros(N, bool)
-        m[cand] = True
-        sc = exact(m)
-        return cand.astype(np.uint32), sc[cand]
+        sc = exact(hit)
+        return cand.astype(np.uint32), sc[cand], len(cand)
     # pass 1: seed = top-k docs by upper bound
     seed = cand[np.argpartition(-ub[cand], k - 1)[:k]]
     seed_mask = np.zeros(N, bool)
@@ -592,7 +595,7 @@ def _wand_candidates(ctx: _Ctx, terms, k: int):
     m = np.zeros(N, bool)
     m[surv] = True
     sc = exact(m)
-    return surv.astype(np.uint32), sc[surv]
+    return surv.astype(np.uint32), sc[surv], len(cand)
 
 
 def _is_pure_disjunction(ctx: _Ctx, node: QueryAst):
@@ -630,7 +633,7 @@ def topk_tiebreak(docids: np.ndarray, scores: np.ndarray, k: int | None):
     return docids[order], scores[order]
 
 
-def evaluate_segment(
+def leaf_search(
     seg: SegmentData,
     ast: QueryAst,
     tokenizer_for_field,
@@ -643,7 +646,14 @@ def evaluate_segment(
     use_wand: bool = True,
     score_cutoff: float | None = None,
 ):
-    """→ (docids, scores) for this segment (top-k-truncated when k given).
+    """One segment's leaf response → (docids, scores, num_hits): the
+    partial hits (top-k-truncated when k is given) plus the segment's
+    exact match count — the reference's `LeafSearchResponse{num_hits,
+    partial_hits}` from a single collector pass (`leaf.rs:437-560`).
+
+    num_hits counts every matching doc (after the `allowed` fast
+    filter) BEFORE the `score_cutoff` and the top-k cut, so a paginated
+    request still reports the query's full total.
 
     `score_cutoff` is the search_after pushdown: only docs with
     score ≤ cutoff are returned, and the per-segment top-k keeps ALL
@@ -653,7 +663,7 @@ def evaluate_segment(
     every match."""
     ctx = _Ctx(seg, mode, global_stats, k1, b, tokenizer_for_field)
     if seg.num_docs == 0:
-        return np.zeros(0, np.uint32), np.zeros(0, ctx.dtype)
+        return np.zeros(0, np.uint32), np.zeros(0, ctx.dtype), 0
     if (
         use_wand
         and k is not None
@@ -664,18 +674,19 @@ def evaluate_segment(
     ):
         terms = _is_pure_disjunction(ctx, ast)
         if terms:
-            docids, scores = _wand_candidates(ctx, terms, k)
-            return topk_tiebreak(docids, scores, k)
+            docids, scores, num_hits = _wand_candidates(ctx, terms, k)
+            return (*topk_tiebreak(docids, scores, k), num_hits)
     mask, scores = _eval(ctx, ast, 1.0)
     if allowed is not None:
         amask = np.zeros(seg.num_docs, bool)
         amask[allowed[allowed < seg.num_docs]] = True
         mask &= amask
     docids = np.flatnonzero(mask).astype(np.uint32)
+    num_hits = len(docids)
     sc = scores[mask]
     if score_cutoff is not None:
         # PERMISSIVE pre-filter: the driver re-applies the exact cursor
-        # predicate on F.round-ed scores, so the kernel must never drop
+        # predicate on rounded scores, so the kernel must never drop
         # a legitimate hit. In oracle mode the cursor was rounded with
         # Java HALF_UP while numpy rounds half-even — they can disagree
         # by 1e-9 at digit 9, so keep everything within that margin and
@@ -686,4 +697,11 @@ def evaluate_segment(
         docids, sc = docids[keep], sc[keep]
         if k is not None:
             k = k + int((sc >= cut - margin).sum())
-    return topk_tiebreak(docids, sc, k)
+    return (*topk_tiebreak(docids, sc, k), num_hits)
+
+
+def evaluate_segment(*args, **kwargs):
+    """→ (docids, scores) for this segment (top-k-truncated when k
+    given): the hits-only view of `leaf_search`, same arguments."""
+    docids, scores, _num_hits = leaf_search(*args, **kwargs)
+    return docids, scores

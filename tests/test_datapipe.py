@@ -854,6 +854,26 @@ def test_image_codecs_roundtrip_and_goldens():
         decode_image(encode_bmp(gradient_image(1, 2, 2))[:30])  # cut header
 
 
+def test_wav_truncated_chunk_raises():
+    """A chunk whose declared size runs past the end of the payload is
+    malformed input: decode_wav raises like the image codecs' truncation
+    paths instead of decoding the partial audio."""
+    import pytest as _pytest
+
+    from quickwit_spark.datapipe.multimodal import (
+        decode_wav,
+        encode_wav,
+        gradient_audio,
+    )
+
+    wav = encode_wav(gradient_audio(3, 64), 8000)
+    decode_wav(wav)  # intact
+    with _pytest.raises(ValueError, match="truncated"):
+        decode_wav(wav[:-10])  # data chunk cut short
+    with _pytest.raises(ValueError, match="truncated"):
+        decode_wav(wav[:30])  # fmt chunk cut short
+
+
 def test_image_channel_sums_match_closed_form(spark):
     """image_channel_sums over real encoded payloads equals the
     gradient's closed form: sum_ch = Σ_{j≡ch (3)} (7*id + j) % 256."""

@@ -710,7 +710,7 @@ def test_split_size_terms_plan_and_error_bound(searcher):
 # lowering robustness fuzz (plan construction only — no jobs)
 # --------------------------------------------------------------------------
 
-from hypothesis import HealthCheck, given, settings, strategies as st  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings, strategies as st  # noqa: E402
 
 _AGG_KINDS = [
     "terms", "histogram", "date_histogram", "range", "avg", "min", "max",
@@ -749,6 +749,8 @@ _clause = st.deferred(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(aggs=st.dictionaries(st.sampled_from(["a", "b"]), _clause, max_size=2))
+@example(aggs={"a": {"histogram": {"field": "lang", "interval": 1}}})
+@example(aggs={"a": {"date_histogram": {"field": "lang"}}})
 def test_aggs_lowering_never_escapes(spark, aggs):
     """run_es_aggs on arbitrary agg bodies either builds plans or raises
     within the wire layer's 400 tuple — unknown fields, bad intervals
@@ -762,6 +764,27 @@ def test_aggs_lowering_never_escapes(spark, aggs):
     except (ValueError, TypeError, KeyError, NotImplementedError):
         return
     assert isinstance(out, dict)
+
+
+@pytest.mark.parametrize(
+    "aggs",
+    [
+        {"a": {"histogram": {"field": "lang", "interval": 1}}},
+        {"a": {"date_histogram": {"field": "lang", "fixed_interval": "1d"}}},
+        {"a": {"terms": {"field": "val"},
+               "aggs": {"sub": {"histogram": {"field": "lang", "interval": 2}}}}},
+    ],
+)
+def test_histogram_on_string_field_is_a_400(spark, aggs):
+    """A (date_)histogram over a string column raises ValueError (the
+    wire layer's 400), not CAST_INVALID_INPUT inside the Spark job —
+    the first example pins the fuzz case of
+    `test_aggs_lowering_never_escapes` that used to escape."""
+    from quickwit_spark.search.es_aggs import run_es_aggs
+
+    df = spark.createDataFrame([(1, "a", 2.0)], ["doc_id", "lang", "val"])
+    with pytest.raises(ValueError, match="string"):
+        run_es_aggs(df, aggs)
 
 
 def test_percentiles_fractional_negative_values(spark):

@@ -97,8 +97,10 @@ def test_match_all_topk_no_full_broadcast(searcher):
 
     df = searcher.search("*", k=5)
     assert len(df.collect()) == 5
+    # per-segment truncation must precede the fetch: the match-all leaf
+    # frame keeps ≤ k docmap rows per segment (a Window before collect)
+    ast, ff, segs = searcher._resolve("*", None)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    # per-segment truncation must precede the join (a Window before it)
+        searcher._matches(ast, segs, 5, "parity", ff).explain("formatted")
     assert "row_number" in buf.getvalue() or "Window" in buf.getvalue()

@@ -13,7 +13,12 @@ from quickwit_spark.analysis import get_tokenizer
 from quickwit_spark.index.builder import FieldConfig, _build_field_rows
 from quickwit_spark.query.ast import Bool, FullText, Term, TermSet
 from quickwit_spark.query.parser import parse_query
-from quickwit_spark.search.kernel import SegmentData, evaluate_segment, topk_tiebreak
+from quickwit_spark.search.kernel import (
+    SegmentData,
+    evaluate_segment,
+    leaf_search,
+    topk_tiebreak,
+)
 
 TOK = lambda f: get_tokenizer("default")  # noqa: E731
 
@@ -196,3 +201,170 @@ def test_term_count_metadata_fast_path(spark, sf_dir):
     slow = s.match_docs(Term("text", "spark")).count()
     assert fast == slow > 0
     assert s.count(Term("text", "zzz_absent")) == 0
+
+
+# --------------------------------------------------------------------------
+# leaf count: the num_hits a top-k leaf reports is the exhaustive match count
+# --------------------------------------------------------------------------
+
+from hypothesis import given, settings, strategies as st  # noqa: E402
+
+from quickwit_spark.codec.postings import (  # noqa: E402
+    block_metadata,
+    decode_positions,
+    decode_postings,
+    encode_positions,
+    encode_postings,
+)
+from quickwit_spark.query.ast import Exists, MatchAll, Phrase  # noqa: E402
+
+
+def _segment_rows(seed: int, n_docs: int):
+    """Inverted-index rows of a seeded Zipfian segment over a 12-word
+    vocabulary: a positions field (`text`) and a freq field (`tag`)."""
+    rng = np.random.default_rng(seed)
+    words = [f"w{i}" for i in range(12)]
+    p = 1.0 / np.arange(1, 13) ** 1.07
+    p /= p.sum()
+
+    def texts(mean):
+        return [
+            " ".join(rng.choice(words, size=int(rng.poisson(mean)), p=p))
+            for _ in range(n_docs)
+        ]
+
+    rows = []
+    for fld, record, mean in (("text", "position", 6), ("tag", "freq", 2)):
+        r, _ = _build_field_rows(
+            "seg0", FieldConfig(fld, record=record), pd.Series(texts(mean)),
+            1.2, 0.75,
+        )
+        rows.extend(r)
+    return rows
+
+
+def _chunked(rows):
+    """The merge executor's layout: every posting list of ≥ 2 docs split
+    into two chunk rows with INTERLEAVED docid ranges (even / odd
+    positions), positions chunked alongside, block metadata rebuilt."""
+    pos = {(r["field"], r["term"]): r for r in rows if r["kind"] == "pos"}
+    out = [r for r in rows if r["kind"] not in ("postings", "pos")]
+    for r in rows:
+        if r["kind"] != "postings":
+            continue
+        key = (r["field"], r["term"])
+        d, tf = decode_postings(r["payload1"], r["payload2"], r["doc_freq"])
+        p = pos.get(key)
+        if len(d) < 2:
+            out.append(r)
+            if p is not None:
+                out.append(p)
+            continue
+        starts = np.concatenate([[0], np.cumsum(tf.astype(np.int64))])
+        stream = decode_positions(p["payload1"], tf) if p is not None else None
+        for part in (slice(0, None, 2), slice(1, None, 2)):
+            cd, ctf = d[part], tf[part]
+            p1, p2 = encode_postings(cd.astype(np.uint64), ctf)
+            tf32 = ctf.astype(np.float32)
+            bl, bm = block_metadata(cd, tf32 / (tf32 + np.float32(0.3)))
+            out.append({**r, "doc_freq": len(cd), "payload1": p1,
+                        "payload2": p2, "block_last": bl, "block_max": bm})
+            if stream is not None:
+                idx = np.arange(len(d))[part]
+                cpos = np.concatenate(
+                    [stream[starts[i]:starts[i + 1]] for i in idx]
+                )
+                out.append({**p, "doc_freq": len(cpos),
+                            "payload1": encode_positions(cpos, ctf),
+                            "meta": f"{int(cd[0]):020d}"})
+    return out
+
+
+_word = st.sampled_from([f"w{i}" for i in range(12)] + ["nope"])
+_field = st.sampled_from(["text", "tag"])
+_leaf = st.one_of(
+    st.builds(Term, _field, _word),
+    st.builds(TermSet, _field, st.lists(_word, min_size=1, max_size=3)),
+    st.builds(
+        FullText, _field, st.lists(_word, min_size=1, max_size=3).map(" ".join),
+        st.sampled_from(["or", "and"]),
+    ),
+    st.builds(
+        Phrase, st.just("text"),
+        st.lists(_word, min_size=2, max_size=3).map(" ".join),
+        st.integers(min_value=0, max_value=1),
+    ),
+    st.builds(Exists, _field),
+    st.just(MatchAll()),
+)
+_query = st.recursive(
+    _leaf,
+    lambda c: st.builds(
+        Bool,
+        st.lists(c, max_size=2),
+        st.lists(c, max_size=1),
+        st.lists(c, max_size=3),
+        st.lists(c, max_size=1),
+    ),
+    max_leaves=4,
+)
+# pure disjunctions take the block-max WAND path; draw them often
+_disjunction = st.one_of(
+    st.builds(TermSet, st.just("text"), st.lists(_word, min_size=1, max_size=4)),
+    st.builds(
+        FullText, st.just("text"),
+        st.lists(_word, min_size=1, max_size=4).map(" ".join), st.just("or"),
+    ),
+    st.builds(Bool, should=st.lists(st.builds(Term, st.just("text"), _word),
+                                     min_size=1, max_size=3)),
+)
+
+
+@settings(max_examples=120, deadline=None)
+@given(
+    seed=st.integers(0, 2**16),
+    n_docs=st.sampled_from([7, 90, 300]),
+    chunked=st.booleans(),
+    query=st.one_of(_disjunction, _query),
+    k=st.sampled_from([1, 3, 10]),
+    path=st.sampled_from(["wand", "exhaustive", "allowed", "cutoff", "oracle"]),
+    cut_rank=st.integers(min_value=0, max_value=5),
+)
+def test_leaf_count_equals_match_count(seed, n_docs, chunked, query, k, path,
+                                       cut_rank):
+    """leaf_search's num_hits == len(evaluate_segment(..., k=None)[0])
+    on the WAND path, the exhaustive path, the `allowed` fast-filter
+    path, the `score_cutoff` (search_after) path and oracle mode, on
+    plain and chunked (merged-segment) postings."""
+    rows = _segment_rows(seed, n_docs)
+    seg = SegmentData.from_rows("seg0", _chunked(rows) if chunked else rows)
+    kw: dict = {}
+    if path == "exhaustive":
+        kw["use_wand"] = False
+    elif path == "allowed":
+        kw["allowed"] = np.arange(0, n_docs + 5, 3, dtype=np.int64)
+    elif path == "oracle":
+        kw["mode"] = "oracle"
+    full, scores = evaluate_segment(seg, query, TOK, k=None, **kw)
+    if path == "cutoff" and len(full):
+        kw["score_cutoff"] = float(
+            np.sort(scores)[::-1][min(cut_rank, len(full) - 1)]
+        )
+    docids, _s, num_hits = leaf_search(seg, query, TOK, k=k, **kw)
+    assert num_hits == len(full), (query, path)
+    assert len(docids) <= len(full)
+    # the hits are the same leaf's top-k view
+    assert list(docids) == list(evaluate_segment(seg, query, TOK, k=k, **kw)[0])
+
+
+def test_leaf_count_wand_path_is_exercised():
+    """The WAND branch reports the union of the posting lists even when
+    block-max pruning drops candidates from the partial hits."""
+    seg = SegmentData.from_rows("seg0", _segment_rows(5, 300))
+    q = FullText("text", "w0 w1 w11", "or")
+    docids, _s, num_hits = leaf_search(seg, q, TOK, k=1)
+    union = set()
+    for w in ("w0", "w1", "w11"):
+        union |= set(seg.postings[("text", w)][0].tolist())
+    assert num_hits == len(union) > 64  # > max(4k, 64): pruning ran
+    assert len(docids) == 1

@@ -5,8 +5,8 @@ silently regress.
 - the postings scan must push the (kind, field, term) predicates into
   the Parquet source (row-group pruning over sorted term runs — the
   reference's warmup/prefetch analog),
-- the fetch join must broadcast the ≤ k·segments winner rows, never
-  shuffle the docmap,
+- the winner fetch must push the partial hits' segment/doc ids into
+  the docmap scan as In filters and never shuffle the docmap,
 - no row-at-a-time Python (BatchEvalPython) anywhere in the query plan.
 """
 
@@ -51,20 +51,54 @@ def test_term_scan_pushes_filters(searcher):
     assert any("kind" in l or "EqualTo" in l for l in pushed), pushed
 
 
-def test_topk_broadcasts_winners(searcher):
-    plan = _plan(searcher.search("text:spark", k=10))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    # global top-k is the TakeOrdered / sort+limit pattern
-    assert "TakeOrderedAndProject" in plan or "GlobalLimit" in plan
+def _captured_fetch_plans(searcher, monkeypatch, run) -> list[str]:
+    """Physical plans of every winner-fetch frame built while `run()`
+    executes a top-k."""
+    plans = []
+    frame = IndexSearcher._fetch_frame
+
+    def capture(self, *args, **kwargs):
+        df = frame(self, *args, **kwargs)
+        plans.append(_plan(df))
+        return df
+
+    monkeypatch.setattr(IndexSearcher, "_fetch_frame", capture)
+    run()
+    monkeypatch.undo()
+    return plans
+
+
+def test_topk_fetch_pushes_winner_ids(searcher, monkeypatch):
+    rows = []
+    plans = _captured_fetch_plans(
+        searcher, monkeypatch,
+        lambda: rows.extend(searcher.search("text:spark", k=10).collect()),
+    )
+    assert rows
+    # search() also builds an unfiltered fetch frame for its hit
+    # schema; the scan that runs is the one carrying the In lists
+    fetch = [p for p in plans if "In(doc_id" in p]
+    assert len(fetch) == 1, plans
+    pushed = [l for l in fetch[0].splitlines() if "PushedFilters" in l]
+    # (a one-segment In list is pushed as EqualTo)
+    assert any(
+        ("In(segment_id" in l or "EqualTo(segment_id" in l) and "In(doc_id" in l
+        for l in pushed
+    ), pushed
+    # the docmap is read in place: no exchange of any kind
+    assert "Exchange" not in fetch[0]
 
 
 def test_no_row_at_a_time_python(searcher):
-    for df in (
-        searcher.search("text:spark", k=5),
-        searcher.match_docs(Term("text", "spark")),
-        searcher.search_stream(Term("text", "spark"), ["lang"]),
+    ast, ff, segs = searcher._resolve("text:spark", None)
+    kernel = _plan(searcher._matches(ast, segs, 5, "parity", ff))
+    assert "FlatMapGroupsInPandas" in kernel  # the top-k leaf frame
+    for plan in (
+        kernel,
+        _plan(searcher.match_docs(Term("text", "spark"))),
+        _plan(searcher.search_stream(Term("text", "spark"), ["lang"])),
     ):
-        assert "BatchEvalPython" not in _plan(df)
+        assert "BatchEvalPython" not in plan
 
 
 def test_hot_postings_cache(searcher):
@@ -153,21 +187,44 @@ def test_round4_surfaces_stay_vectorized(spark):
     assert "Window" not in trace_plan
 
 
-def test_fetch_pushdown_path_equals_broadcast_path(searcher, monkeypatch):
-    """The size-gated winner-id pushdown fetch (used for big docmaps)
-    must return exactly what the single-job broadcast join returns."""
+def test_topk_equals_brute_force(searcher):
+    """The one-pass top-k (leaf partial hits + per-segment counts,
+    driver merge, pushed-filter fetch) returns exactly the brute-force
+    ranking of every match by (score desc, doc_key desc), and its
+    counts sum to the full match count."""
+    from pyspark.sql import functions as F
+
     from quickwit_spark.query.ast import FullText
 
-    q = FullText("text", "spark join", "or")
-    base = [
-        (r["doc_key"], r["score"], r["rank"])
-        for r in searcher.search(q, k=7).collect()
-    ]
-    monkeypatch.setenv("QWS_FETCH_PUSHDOWN_MIN_BYTES", "0")
-    forced = [
-        (r["doc_key"], r["score"], r["rank"])
-        for r in searcher.search(q, k=7).collect()
-    ]
-    assert forced == base
-    # zero-hit query through the pushdown gate: clean empty result
+    docs = searcher.docs().select("segment_id", "doc_id", "doc_key")
+    for q in (
+        FullText("text", "spark join", "or"),
+        FullText("text", "spark join", "and"),
+        Term("text", "spark"),
+    ):
+        for mode in ("parity", "oracle"):
+            full = searcher.match_docs(q, mode=mode)
+            if mode == "oracle":
+                full = full.withColumn("score", F.round("score", 9))
+            every = sorted(
+                (
+                    (r["score"], r["doc_key"])
+                    for r in full.join(docs, ["segment_id", "doc_id"]).collect()
+                ),
+                reverse=True,
+            )
+            got = searcher.search(q, k=7, mode=mode).collect()
+            assert [(r["score"], r["doc_key"]) for r in got] == every[:7]
+            assert [r["rank"] for r in got] == list(range(1, len(got) + 1))
+            _hits, counts = searcher._topk(searcher._resolve(q, None), 7, mode)
+            assert sum(counts.values()) == len(every) == searcher.count(q)
+            if len(every) > 7:
+                # paging with the last hit's cursor continues the order
+                last = got[-1]
+                page2 = searcher.search(
+                    q, k=5, mode=mode,
+                    search_after=(last["score"], last["doc_key"]),
+                ).collect()
+                assert [(r["score"], r["doc_key"]) for r in page2] == every[7:12]
+    # zero-hit query: clean empty result
     assert searcher.search(FullText("text", "zzzznope", "or"), k=5).collect() == []
