@@ -3929,13 +3929,18 @@ def _q_agg_terms_query_cogroup(spark, sf_dir):
 
     from quickwit_spark.search.aggs import terms_agg_for_query
 
+    prior = _os.environ.get("QWS_AGG_COGROUP_MIN_DOCS")
     _os.environ["QWS_AGG_COGROUP_MIN_DOCS"] = "0"
     try:
         return terms_agg_for_query(
             _searcher(spark, sf_dir), Term("text", "spark"), "lang", size=10
         )
     finally:
-        _os.environ.pop("QWS_AGG_COGROUP_MIN_DOCS", None)
+        # restore a caller's own setting rather than dropping it
+        if prior is None:
+            _os.environ.pop("QWS_AGG_COGROUP_MIN_DOCS", None)
+        else:
+            _os.environ["QWS_AGG_COGROUP_MIN_DOCS"] = prior
 
 
 _AGG_TERMS_QUERY_SQL = """

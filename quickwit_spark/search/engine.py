@@ -18,6 +18,11 @@ The Spark re-expression of the reference's query lifecycle
      scan with segment/doc id In filters pushed into the parquet reader
      (fetch_docs analog).
 
+Searches over at most `IndexSearcher._LOCAL_MAX_DOCS` docs run steps 2
+and 3 on the driver instead: pyarrow reads the same rows and calls the
+same kernel entry point (`SegmentData.from_rows` + `leaf_search`), so
+no Spark stage is dispatched — one kernel, two transports.
+
 Two scoring modes:
   parity  f32 + quantized fieldnorms + per-segment stats — reference
           rank-identity semantics.
@@ -33,11 +38,15 @@ import json
 import os
 import re as _re
 import threading
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from quickwit_spark.analysis import get_tokenizer
 from quickwit_spark.analysis.tokenizer import resolve_tokenizer
@@ -79,6 +88,86 @@ MATCH_SCHEMA = "segment_id string, doc_id long, score double"
 # count row (doc_id and score null) carrying its exact match count —
 # the reference's LeafSearchResponse{num_hits, partial_hits}
 LEAF_SCHEMA = MATCH_SCHEMA + ", num_hits long"
+
+
+# the inverted-index rows the driver transport reads: the builder's
+# INV_SCHEMA columns plus the hive partition columns of inv/
+_INV_ARROW = pa.schema(
+    [
+        ("segment_id", pa.string()),
+        ("field", pa.string()),
+        ("term", pa.string()),
+        ("doc_freq", pa.int64()),
+        ("payload1", pa.binary()),
+        ("payload2", pa.binary()),
+        ("block_last", pa.binary()),
+        ("block_max", pa.binary()),
+        ("meta", pa.string()),
+        ("batch_id", pa.string()),
+        ("kind", pa.string()),
+    ]
+)
+
+# docmap column types the driver fetch reads and converts to the values
+# Spark's collect returns (Spark type name → Arrow type): doc_id plus
+# the types a doc mapping produces; a fetch of any other column type
+# stays on Spark
+_DOC_ARROW = {
+    "string": pa.string(),
+    "bigint": pa.int64(),
+    "int": pa.int32(),
+    "double": pa.float64(),
+    "boolean": pa.bool_(),
+    "binary": pa.binary(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+
+
+def _doc_arrow_type(dtype: str):
+    """Arrow type of a docmap column of Spark type `dtype`, or None when
+    the driver fetch does not read that type."""
+    m = _re.fullmatch(r"decimal\((\d+),(\d+)\)", dtype)
+    if m:
+        return pa.decimal128(int(m.group(1)), int(m.group(2)))
+    return _DOC_ARROW.get(dtype)
+
+
+def _arrow_pylist(arr, dtype: str) -> list:
+    """An Arrow docmap column → the Python values Spark's collect gives
+    for Spark type `dtype` (timestamps as the same naive local
+    datetimes)."""
+    if dtype == "timestamp":
+        t = T.TimestampType()
+        return [
+            None if v is None else t.fromInternal(v)
+            for v in arr.cast(pa.int64()).to_pylist()
+        ]
+    return arr.to_pylist()
+
+
+def _segment_leaf(segment_id: str, rows: list[dict], allowed, ast, tok, **kw):
+    """One segment's leaf, the kernel entry point both transports call:
+    `SegmentData.from_rows` over the segment's inv rows, then
+    `leaf_search`. `allowed` None means no fast filter; an empty
+    `allowed` (no doc passes the filter) is no hits and a count of 0.
+    → (docids, scores, num_hits)."""
+    if allowed is not None and len(allowed) == 0:
+        empty = np.zeros(0, np.int64)
+        return empty, empty, 0
+    return leaf_search(
+        SegmentData.from_rows(segment_id, rows), ast, tok, allowed=allowed, **kw
+    )
+
+
+class _ArrowSnapshot(NamedTuple):
+    """The driver transport's view of one refresh: the live segment ids
+    and the pyarrow datasets listed in the same step, so a request
+    never pairs a segment list with another refresh's file list."""
+
+    segment_ids: frozenset
+    inv: object  # pyarrow Dataset over inv/ (None: no segments)
+    docs: object  # over docs/ (None: several doc-mapping generations)
+    doc_types: dict  # docmap column → Spark type, for the readable columns
 
 
 def qcol(name: str):
@@ -496,6 +585,7 @@ class IndexSearcher:
                 self._early_m1 = None
             self._dfreq = {}
             self._dfreq_fetched = set()
+            self._arrow = _ArrowSnapshot(frozenset(), None, None, {})
             return
         # re-list the parquet datasets once per refresh, not per query
         self._inv = self.spark.read.parquet(f"{self.index_dir}/inv")
@@ -546,6 +636,7 @@ class IndexSearcher:
         # docmap column → Spark type name, for typed Range bound
         # normalization over dynamic dot-path fast columns
         self._doc_types = dict(self._docs.dtypes)
+        self._arrow = self._arrow_snapshot(uids)
         # dot-path field → physical docmap column (dynamic doc mapping)
         self._colmap = {
             p: (o or {}).get("column", p)
@@ -564,6 +655,42 @@ class IndexSearcher:
         # per query) — invalidates with the segment set
         self._dfreq: dict[tuple, int] = {}
         self._dfreq_fetched: set[str] = set()
+
+    def _arrow_snapshot(self, uids: list[int]) -> _ArrowSnapshot:
+        """pyarrow datasets over inv/ and, for a single doc-mapping
+        generation, docs/ — listed once per refresh like the Spark
+        frames. The docs dataset takes its schema from the Spark read
+        (mergeSchema over dynamic-mapping batches), limited to the
+        column types `_arrow_pylist` converts."""
+        from quickwit_spark.index.builder import docs_path
+
+        hive = pa.schema([("batch_id", pa.string()), ("kind", pa.string())])
+        inv = pds.dataset(
+            f"{self.index_dir}/inv",
+            format="parquet",
+            schema=_INV_ARROW,
+            partitioning=pds.partitioning(hive, flavor="hive"),
+        )
+        docs = None
+        doc_types: dict = {}
+        if uids == [0] and self.current_uid == 0:
+            fields = []
+            for name, dtype in self._doc_types.items():
+                at = _doc_arrow_type(dtype)
+                if at is not None and name != "batch_id":
+                    fields.append((name, at))
+                    doc_types[name] = dtype
+            docs = pds.dataset(
+                docs_path(self.index_dir, 0),
+                format="parquet",
+                schema=pa.schema([*fields, ("batch_id", pa.string())]),
+                partitioning=pds.partitioning(
+                    pa.schema([("batch_id", pa.string())]), flavor="hive"
+                ),
+            )
+        return _ArrowSnapshot(
+            frozenset(s.segment_id for s in self.segments), inv, docs, doc_types
+        )
 
     # ---------- catalogs ----------
 
@@ -598,7 +725,10 @@ class IndexSearcher:
         warmup byte-range cache): repeated queries over the cached
         terms serve from an InMemoryTableScan instead of re-reading
         Parquet. Returns the number of cached rows. The cache is
-        dropped on `refresh()` (segment set changed) or `uncache()`."""
+        dropped on `refresh()` (segment set changed) or `uncache()`.
+        It serves the Spark transport only: a search small enough for
+        the driver transport (`_LOCAL_MAX_DOCS`) reads its rows with
+        pyarrow and does not look at the cache."""
         tvals = sorted(set(terms))
         base = self._seg_pred_filter(self.inv(), self.live_ids)
         cond = (F.col("kind") == KIND_POSTINGS) & F.col("term").isin(tvals)
@@ -1128,6 +1258,149 @@ class IndexSearcher:
         )
         return df.join(F.broadcast(ids_df), "segment_id", "left_semi")
 
+    # ---------- driver transport ----------
+
+    # searches whose segments (after time/tag pruning) hold at most this
+    # many docs run the top-k leaf, the winner fetch and count() on the
+    # driver: pyarrow reads of the searched segments into the same
+    # `SegmentData.from_rows` + `leaf_search` calls the Spark frame
+    # makes, with no Python stage to dispatch. Measured crossover
+    # (CHANGES.md, 10 k-10 M docs, solo and 4/9 concurrent clients): the
+    # driver was faster at every size, but its work holds the GIL, so
+    # at 10 M docs its throughput under concurrent clients only matched
+    # Spark's. 3 M is the largest measured size at which it won on
+    # every class solo and on both latency and throughput concurrently.
+    _LOCAL_MAX_DOCS = 3_000_000
+
+    def _leaf_transport(self, ast, fast_filter, seg_ids, mode: str) -> str:
+        """"driver" or "spark" for the leaf of a search over `seg_ids`.
+        Oracle scores (rounded by Spark) and the unfiltered match-all
+        leaf (a docmap window, no kernel) stay on Spark, as does a
+        segment list newer than the refresh's pyarrow datasets."""
+        if mode != "parity" or (isinstance(ast, MatchAll) and fast_filter is None):
+            return "spark"
+        keep = set(seg_ids)
+        if not keep <= self._arrow.segment_ids:
+            return "spark"
+        n_docs = sum(s.num_docs for s in self.segments if s.segment_id in keep)
+        return "driver" if n_docs <= self._LOCAL_MAX_DOCS else "spark"
+
+    def _driver_leaf_filter(self, ast, seg_ids):
+        """The pushed filter of the driver leaf's inv/ read: the kind
+        partitions it needs, the searched segment ids and the query
+        terms (row-group stats over the sorted term runs) — the rows
+        `_matches` feeds the kernel."""
+        tok = self._tokenizer_for_field()
+        tvals = sorted({t for _, t in collect_fulltext_terms(ast, tok)})
+        kind, term = pds.field("kind"), pds.field("term")
+        want = kind.isin([KIND_NORMS, KIND_STATS])
+        if tvals:
+            want = want | ((kind == KIND_POSTINGS) & term.isin(tvals))
+            if _has_phrase(ast):
+                want = want | ((kind == KIND_POS) & term.isin(tvals))
+        return pds.field("segment_id").isin(sorted(seg_ids)) & want
+
+    def _allowed_ids_frame(self, fast_filter, seg_ids) -> DataFrame:
+        """(segment_id, doc_id) of the docs passing the fast filter: a
+        pushed-filter docmap scan."""
+        return (
+            self._seg_pred_filter(self.docs(), seg_ids)
+            .filter(fast_filter)
+            .select("segment_id", "doc_id")
+        )
+
+    def _driver_leaf(
+        self,
+        ast: QueryAst,
+        seg_ids: list[str],
+        k: int,
+        fast_filter=None,
+        use_wand: bool = True,
+        search_after: tuple | None = None,
+    ) -> tuple[list[tuple], dict]:
+        """The top-k leaf of `_matches`, run on the driver: one pyarrow
+        read of the searched segments' rows, then per segment the same
+        `SegmentData.from_rows` + `leaf_search` calls. With a fast
+        filter the allowed doc ids come from one docmap scan collected
+        as Arrow (a JVM-only job). `k=0` counts only.
+        → (partial hits [(score, segment_id, doc_id)], {segment_id:
+        num_hits}) — the rows the Spark leaf frame collects to."""
+        if not seg_ids:
+            return [], {}
+        rows = self._arrow.inv.to_table(
+            filter=self._driver_leaf_filter(ast, seg_ids)
+        ).to_pylist()
+        by_seg: dict[str, list] = {}
+        for r in rows:
+            by_seg.setdefault(r["segment_id"], []).append(r)
+        allowed_by = None
+        if fast_filter is not None:
+            ids = (
+                self._allowed_ids_frame(fast_filter, seg_ids)
+                .toArrow()
+                .group_by("segment_id")
+                .aggregate([("doc_id", "list")])
+            )
+            allowed_by = {
+                sid: lst.values.to_numpy().astype(np.int64)
+                for sid, lst in zip(
+                    ids.column("segment_id").to_pylist(),
+                    ids.column("doc_id_list"),
+                )
+            }
+        tok = self._tokenizer_for_field()
+        score_cutoff = search_after[0] if search_after is not None else None
+        partial: list[tuple] = []
+        counts: dict[str, int] = {}
+        no_ids = np.zeros(0, np.int64)
+        for sid, seg_rows in by_seg.items():
+            allowed = None if allowed_by is None else allowed_by.get(sid, no_ids)
+            docids, scores, num_hits = _segment_leaf(
+                sid,
+                seg_rows,
+                allowed,
+                ast,
+                tok,
+                k=k,
+                k1=self.config.k1,
+                b=self.config.b,
+                use_wand=use_wand,
+                score_cutoff=score_cutoff,
+            )
+            counts[sid] = int(num_hits)
+            partial.extend(
+                (score, sid, did)
+                for score, did in zip(
+                    scores.astype(np.float64).tolist(),
+                    docids.astype(np.int64).tolist(),
+                )
+            )
+        return partial, counts
+
+    def _driver_fetch(self, cols, keys) -> dict:
+        """`_fetch` read on the driver: the winners' docmap rows from the
+        refresh's pyarrow dataset, segment/doc id In filters pushed to
+        the row-group stats, values converted as Spark's collect
+        converts them. → {(segment_id, doc_id): row dict}."""
+        snap = self._arrow
+        phys = list(
+            dict.fromkeys(
+                ["segment_id", "doc_id", "doc_key", *(self._fcol(c) for c in cols)]
+            )
+        )
+        tbl = snap.docs.to_table(
+            columns=phys,
+            filter=pds.field("segment_id").isin(sorted({s for s, _ in keys}))
+            & pds.field("doc_id").isin(sorted({d for _, d in keys})),
+        )
+        vals = {c: _arrow_pylist(tbl.column(c), snap.doc_types[c]) for c in phys}
+        out = {}
+        for i, key in enumerate(zip(vals["segment_id"], vals["doc_id"])):
+            row = {"doc_key": vals["doc_key"][i]}
+            row.update((c, vals[self._fcol(c)][i]) for c in cols)
+            out[key] = row
+        return out
+
     def _matches(
         self,
         ast: QueryAst,
@@ -1220,12 +1493,15 @@ class IndexSearcher:
                 segment_id = seg_pdf["segment_id"].iloc[0]
                 allowed = None
                 if with_allowed:
-                    if allowed_pdf is None or len(allowed_pdf) == 0:
-                        return out(segment_id, empty, empty, 0)
-                    allowed = allowed_pdf["doc_id"].to_numpy(np.int64)
-                seg = SegmentData.from_rows(segment_id, seg_pdf.to_dict("records"))
-                docids, scores, num_hits = leaf_search(
-                    seg,
+                    allowed = (
+                        empty
+                        if allowed_pdf is None
+                        else allowed_pdf["doc_id"].to_numpy(np.int64)
+                    )
+                docids, scores, num_hits = _segment_leaf(
+                    segment_id,
+                    seg_pdf.to_dict("records"),
+                    allowed,
                     ast,
                     lambda f: resolve_tokenizer(
                         cfg_fields.get(f, "default"), custom_toks
@@ -1233,7 +1509,6 @@ class IndexSearcher:
                     k=k,
                     mode=mode,
                     global_stats=gstats,
-                    allowed=allowed,
                     k1=k1,
                     b=b,
                     use_wand=use_wand,
@@ -1269,11 +1544,7 @@ class IndexSearcher:
         active = max(1, int(getattr(self, "_active_queries", 0)))
         kparts = max(1, min(n_groups or 1, max(1, wave // active)))
         if fast_filter is not None:
-            allowed_df = (
-                self._seg_pred_filter(self.docs(), seg_ids)
-                .filter(fast_filter)
-                .select("segment_id", "doc_id")
-            )
+            allowed_df = self._allowed_ids_frame(fast_filter, seg_ids)
             fn = make_eval(True)
             return (
                 inv.repartition(kparts, "segment_id")
@@ -1417,8 +1688,10 @@ class IndexSearcher:
         counts): match-all answers from the manifest; a bare Term
         answers from the postings doc_freq metadata — a narrow
         pushed-filter scan, no kernel, exact because pending deletes
-        stay searchable until rewrite. `segments` restricts the count
-        to a segment subset (the early-termination underestimate
+        stay searchable until rewrite. Other queries count with a
+        count-only (k=0) leaf on the driver when `_leaf_transport`
+        picks it, else with the kernel frame. `segments` restricts the
+        count to a segment subset (the early-termination underestimate
         path)."""
         ast, fast_filter, seg_ids = (
             _resolved if _resolved is not None else self._resolve(query, time_range)
@@ -1439,6 +1712,8 @@ class IndexSearcher:
                     ).items()
                     if fld == ast.field and sid in keep
                 )
+        if self._leaf_transport(ast, fast_filter, seg_ids, "parity") == "driver":
+            return sum(self._driver_leaf(ast, seg_ids, 0, fast_filter)[1].values())
         return self._matches(ast, seg_ids, None, "parity", fast_filter).count()
 
     @_concurrent_span
@@ -1637,11 +1912,21 @@ class IndexSearcher:
             docs = docs.filter(F.col("doc_id").isin(doc_ids))
         return docs
 
-    def _fetch(self, cols, keys) -> dict:
+    def _fetch(self, cols, keys, driver: bool = False) -> dict:
         """{(segment_id, doc_id): docmap row} for the (segment_id,
-        doc_id) pairs `keys`, in one scan."""
+        doc_id) pairs `keys`, in one scan. `driver` reads it with
+        pyarrow when the index has one doc-mapping generation (the Spark
+        read applies `align_generations`) and every column is of a type
+        the driver read converts."""
         if not keys:
             return {}
+        snap = self._arrow
+        if (
+            driver
+            and snap.docs is not None
+            and all(self._fcol(c) in snap.doc_types for c in ("doc_key", *cols))
+        ):
+            return self._driver_fetch(cols, keys)
         seg_set = sorted({s for s, _ in keys})
         if len(keys) <= self._FETCH_IN_MAX:
             frame = self._fetch_frame(cols, seg_set, sorted({d for _, d in keys}))
@@ -1666,9 +1951,12 @@ class IndexSearcher:
         """Top-k by BM25 as one leaf→root pass (reference leaf search,
         root merge and fetch_docs; SURVEY §3.1 steps 5-7):
 
-          leaf   ONE collect of the kernel frame: per segment ≤ k partial
-                 hits (plus ties at the search_after score) and the exact
-                 num_hits, counted before the cursor and the top-k cut;
+          leaf   ONE collect of the kernel frame (or, for small
+                 searches, the same kernel run on the driver over a
+                 pyarrow read — `_leaf_transport`): per segment ≤ k
+                 partial hits (plus ties at the search_after score) and
+                 the exact num_hits, counted before the cursor and the
+                 top-k cut;
           root   the driver merges the partial hits by (score desc,
                  doc_key desc), applying the cursor;
           fetch  one docmap scan for the candidates that can still win.
@@ -1677,18 +1965,24 @@ class IndexSearcher:
         score, rank, *cols (+ segment_id after a doc-mapping update),
         and {segment_id: num_hits} over the searched segments."""
         ast, fast_filter, seg_ids = resolved
-        leaf = self._matches(
-            ast, seg_ids, k, mode, fast_filter, use_wand, search_after
-        )
-        if mode == "oracle":
-            leaf = leaf.withColumn("score", F.round(F.col("score"), 9))
-        counts: dict[str, int] = {}
-        partial = []
-        for r in leaf.collect():
-            if r["doc_id"] is None:
-                counts[r["segment_id"]] = r["num_hits"]
-            else:
-                partial.append((r["score"], r["segment_id"], r["doc_id"]))
+        driver = self._leaf_transport(ast, fast_filter, seg_ids, mode) == "driver"
+        if driver:
+            partial, counts = self._driver_leaf(
+                ast, seg_ids, k, fast_filter, use_wand, search_after
+            )
+        else:
+            leaf = self._matches(
+                ast, seg_ids, k, mode, fast_filter, use_wand, search_after
+            )
+            if mode == "oracle":
+                leaf = leaf.withColumn("score", F.round(F.col("score"), 9))
+            counts: dict[str, int] = {}
+            partial = []
+            for r in leaf.collect():
+                if r["doc_id"] is None:
+                    counts[r["segment_id"]] = r["num_hits"]
+                else:
+                    partial.append((r["score"], r["segment_id"], r["doc_id"]))
         if isinstance(ast, MatchAll) and fast_filter is None:
             keep = set(seg_ids)
             counts = {
@@ -1715,7 +2009,7 @@ class IndexSearcher:
         if 0 < k <= len(sure):
             theta = heapq.nlargest(k, sure)[-1]
             partial = [p for p in partial if p[0] >= theta]
-        rows = self._fetch(cols, [(sid, did) for _, sid, did in partial])
+        rows = self._fetch(cols, [(sid, did) for _, sid, did in partial], driver)
         hits = []
         for score, sid, did in partial:
             r = rows.get((sid, did))
@@ -2122,9 +2416,11 @@ class IndexSearcher:
         """Explain analog of the reference's `search-plan` endpoint
         (`quickwit-search/src/root.rs:1243-1330`): the resolved AST,
         the segments kept after manifest pruning, the posting terms the
-        plan will touch (warmup set), and Spark's formatted physical
-        plans of the top-k query's two scans (leaf kernel frame and
-        winner fetch), explained without running them. `early_terminate=True` additionally
+        plan will touch (warmup set), the leaf `transport` ("driver" or
+        "spark") and, in `spark_plan`, the top-k query's two reads
+        (leaf and winner fetch) without running them: Spark's formatted
+        physical plans, or the driver transport's pyarrow reads and
+        their pushed filters. `early_terminate=True` additionally
         runs the split-order triage (phase-1 probe + θ) and reports
         which segments the bound PROVES losers (demoted to
         count-only/skip — the `CanSplitDoBetter` evidence)."""
@@ -2149,17 +2445,43 @@ class IndexSearcher:
         import contextlib
         import io
 
-        # the two plans a top-k runs, built but not executed: the leaf
-        # kernel frame, then the winner fetch (whose doc_id In list is
-        # bound to the kernel's partial hits at run time)
+        # the plans a top-k runs, built but not executed: the leaf, then
+        # the winner fetch (whose doc_id In list is bound to the leaf's
+        # partial hits at run time). The driver transport's reads are
+        # described by their pushed pyarrow filters instead.
+        transport = self._leaf_transport(ast, fast_filter, seg_ids, "parity")
+        snap = self._arrow
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            print("== leaf kernel: partial hits + num_hits per segment ==")
-            self._matches(ast, seg_ids, k, "parity", fast_filter).explain(
-                "formatted"
-            )
-            print("== winner fetch: docmap scan of the merged partial hits ==")
-            self._fetch_frame([], seg_ids).explain("formatted")
+            if transport == "driver":
+                print(
+                    "== leaf (driver): pyarrow read of inv/, "
+                    f"{len(snap.inv.files)} files, into the kernel per segment =="
+                )
+                print(f"filter: {self._driver_leaf_filter(ast, seg_ids)}")
+                if fast_filter is not None:
+                    print("== allowed doc ids: docmap scan collected as Arrow ==")
+                    self._allowed_ids_frame(fast_filter, seg_ids).explain(
+                        "formatted"
+                    )
+            else:
+                print("== leaf kernel: partial hits + num_hits per segment ==")
+                self._matches(ast, seg_ids, k, "parity", fast_filter).explain(
+                    "formatted"
+                )
+            if transport == "driver" and snap.docs is not None:
+                print(
+                    "== winner fetch (driver): pyarrow read of docs/, "
+                    f"{len(snap.docs.files)} files, of the merged partial hits =="
+                )
+                print(
+                    "filter: "
+                    f"{pds.field('segment_id').isin(sorted(seg_ids))}"
+                    " and doc_id in <partial hit ids>"
+                )
+            else:
+                print("== winner fetch: docmap scan of the merged partial hits ==")
+                self._fetch_frame([], seg_ids).explain("formatted")
         early = {}
         if early_terminate:
             et = self.search_early(
@@ -2184,6 +2506,7 @@ class IndexSearcher:
                 s.num_docs for s in self.segments if s.segment_id in set(seg_ids)
             ),
             "warmup_terms": sorted({t for _, t in terms}),
+            "transport": transport,
             "spark_plan": buf.getvalue(),
         }
 

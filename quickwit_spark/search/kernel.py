@@ -568,8 +568,9 @@ def _wand_candidates(ctx: _Ctx, terms, k: int):
         bounds = np.repeat(block_max * w, reps)
         np.add.at(ub, docids, bounds)
     cand = np.flatnonzero(hit)
-    if len(cand) == 0:
-        return np.zeros(0, np.uint32), np.zeros(0, np.float32), 0
+    if len(cand) == 0 or k == 0:
+        # k=0 is a count-only leaf: no partial hits, exact num_hits
+        return np.zeros(0, np.uint32), np.zeros(0, np.float32), len(cand)
 
     def exact(doc_subset_mask):
         scores = np.zeros(N, np.float32)
@@ -653,7 +654,8 @@ def leaf_search(
 
     num_hits counts every matching doc (after the `allowed` fast
     filter) BEFORE the `score_cutoff` and the top-k cut, so a paginated
-    request still reports the query's full total.
+    request still reports the query's full total. `k=0` is a count-only
+    leaf: no partial hits, the exact num_hits.
 
     `score_cutoff` is the search_after pushdown: only docs with
     score ≤ cutoff are returned, and the per-segment top-k keeps ALL
@@ -695,7 +697,7 @@ def leaf_search(
         margin = ctx.dtype(1.1e-9) if mode == "oracle" else ctx.dtype(0.0)
         keep = sc <= cut + margin
         docids, sc = docids[keep], sc[keep]
-        if k is not None:
+        if k:  # k=0 stays count-only
             k = k + int((sc >= cut - margin).sum())
     return (*topk_tiebreak(docids, sc, k), num_hits)
 

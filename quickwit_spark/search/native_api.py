@@ -235,7 +235,8 @@ def native_search_plan(searcher, params: dict) -> dict:
     (parsed query AST), `tantivy_ast` (the engine-resolved filter form),
     `searched_splits`, `storage_requests` (per-kind scan counts) — plus
     this engine's own plan evidence (`warmup_terms`, `num_docs_searched`,
-    `spark_plan`, the physical plan Catalyst picked)."""
+    the leaf `transport`, and `spark_plan`: the physical plans Catalyst
+    picked, or the driver transport's pyarrow reads)."""
     unknown = sorted(set(params) - _KNOWN_PARAMS)
     if unknown:
         raise ValueError(f"unknown search parameter(s): {', '.join(unknown)}")
@@ -282,6 +283,7 @@ def native_search_plan(searcher, params: dict) -> dict:
         "segments_pruned": plan["segments_pruned"],
         "num_docs_searched": plan["num_docs_searched"],
         "warmup_terms": plan["warmup_terms"],
+        "transport": plan["transport"],
         "spark_plan": plan["spark_plan"],
     }
 

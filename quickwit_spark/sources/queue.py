@@ -456,14 +456,21 @@ class QueueCoordinator:
                     # the source (it would crash every drain forever):
                     # reject-and-audit like a malformed doc — EOF the
                     # shard so redeliveries dedupe, ack, record why
+                    try:
+                        with self.facade._index_lock(self.index_id):
+                            st = self.facade._state(self.index_id)
+                            self._mark_eof(st, pid)
+                            self.facade._save_state(self.index_id, st)
+                    except ShardOwnershipLost:
+                        # re-acquired by another pipeline meanwhile:
+                        # like the ingest path, skip the message and
+                        # leave it unacked for the owner
+                        dropped += 1
+                        continue
                     rejected += 1
                     errors.append(
                         {"partition_id": pid, "reason": f"not UTF-8: {e}"}
                     )
-                    with self.facade._index_lock(self.index_id):
-                        st = self.facade._state(self.index_id)
-                        self._mark_eof(st, pid)
-                        self.facade._save_state(self.index_id, st)
                     self.queue.acknowledge([msg.ack_id])
                     continue
                 lines = [ln for ln in text.splitlines() if ln.strip()]

@@ -207,7 +207,7 @@ def test_term_count_metadata_fast_path(spark, sf_dir):
 # leaf count: the num_hits a top-k leaf reports is the exhaustive match count
 # --------------------------------------------------------------------------
 
-from hypothesis import given, settings, strategies as st  # noqa: E402
+from hypothesis import example, given, settings, strategies as st  # noqa: E402
 
 from quickwit_spark.codec.postings import (  # noqa: E402
     block_metadata,
@@ -321,12 +321,16 @@ _disjunction = st.one_of(
 
 
 @settings(max_examples=120, deadline=None)
+# a count-only (k=0) leaf on the WAND path past its exhaustive cutoff
+@example(seed=5, n_docs=300, chunked=False,
+         query=FullText("text", "w0 w1 w11", "or"), k=0, path="wand",
+         cut_rank=0)
 @given(
     seed=st.integers(0, 2**16),
     n_docs=st.sampled_from([7, 90, 300]),
     chunked=st.booleans(),
     query=st.one_of(_disjunction, _query),
-    k=st.sampled_from([1, 3, 10]),
+    k=st.sampled_from([0, 1, 3, 10]),
     path=st.sampled_from(["wand", "exhaustive", "allowed", "cutoff", "oracle"]),
     cut_rank=st.integers(min_value=0, max_value=5),
 )
@@ -353,6 +357,7 @@ def test_leaf_count_equals_match_count(seed, n_docs, chunked, query, k, path,
     docids, _s, num_hits = leaf_search(seg, query, TOK, k=k, **kw)
     assert num_hits == len(full), (query, path)
     assert len(docids) <= len(full)
+    assert k or len(docids) == 0  # k=0: count only
     # the hits are the same leaf's top-k view
     assert list(docids) == list(evaluate_segment(seg, query, TOK, k=k, **kw)[0])
 

@@ -69,6 +69,9 @@ def _captured_fetch_plans(searcher, monkeypatch, run) -> list[str]:
 
 
 def test_topk_fetch_pushes_winner_ids(searcher, monkeypatch):
+    # pin the Spark transport: this index is small enough for the
+    # driver's pyarrow leaf and fetch
+    monkeypatch.setattr(IndexSearcher, "_LOCAL_MAX_DOCS", 0)
     rows = []
     plans = _captured_fetch_plans(
         searcher, monkeypatch,
@@ -101,12 +104,15 @@ def test_no_row_at_a_time_python(searcher):
         assert "BatchEvalPython" not in plan
 
 
-def test_hot_postings_cache(searcher):
+def test_hot_postings_cache(searcher, monkeypatch):
     """Warmup/leaf-cache analog: cached terms serve from an
     InMemoryTableScan with identical results; cache misses fall back to
     the Parquet scan path."""
     from quickwit_spark.query.ast import FullText
 
+    # pin the Spark transport: the cache serves the Spark leaf frame,
+    # and this index is small enough for the driver's pyarrow leaf
+    monkeypatch.setattr(IndexSearcher, "_LOCAL_MAX_DOCS", 0)
     base = searcher.search("text:spark", k=10).collect()
     n = searcher.cache_hot_postings(["spark", "join"])
     assert n > 0

@@ -314,6 +314,40 @@ def test_coordinator_poison_message_rejected_not_wedged(facade):
     assert res["messages_indexed"] == 0 and res.get("rejected") is None
 
 
+def test_coordinator_reject_path_skips_lost_shard(facade):
+    """A non-UTF-8 message whose shard another pipeline re-acquired
+    before the reject's EOF commit is skipped and left unacked for the
+    new owner; the drain goes on to the next message."""
+    clock = Clock()
+    q = MemoryQueue(now_fn=clock)
+    q.send("bad.bin", b"\xff\xfe\x00garbage")
+    q.send("good.ndjson", _payload(0, 2))
+    facade.create_source(
+        "qidx",
+        {"source_id": "qsrc", "source_type": "queue",
+         "params": {"queue_dir": "unused"}},
+    )
+    coord = QueueCoordinator(
+        facade=facade, index_id="qidx", source_id="qsrc", queue=q,
+        now_fn=clock,
+    )
+    real_mark_eof = coord._mark_eof
+
+    def hijack_then_mark(state, pid):
+        if pid == "bad.bin":
+            state["sources"]["qsrc"]["shards"][pid]["token"] = "pipelineB"
+        return real_mark_eof(state, pid)
+
+    coord._mark_eof = hijack_then_mark
+    res = coord.run()
+    assert res["messages_dropped"] == 1
+    assert res["num_docs"] == 2 and res["messages_indexed"] == 1
+    assert res.get("rejected") is None
+    # the poison message was not acked: the owner can still receive it
+    clock.t += 1000
+    assert [m.partition_id for m in q.receive(10, 30)] == ["bad.bin"]
+
+
 def test_coordinator_commit_aborts_on_lost_ownership(facade):
     """If another pipeline re-acquires a shard mid-processing, the
     first pipeline's commit aborts (ShardOwnershipLost) instead of

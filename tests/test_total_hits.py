@@ -119,13 +119,10 @@ def test_total_hits_match_count_paths(searcher):
     assert relations == {"eq", "gte"}
 
 
-def _udf_jobs(spark, group: str) -> list[int]:
-    """Jobs of `group` that run a pandas UDF: the job's SQL execution
-    plans a FlatMap(Co)GroupsInPandas and the job reads a shuffle (its
-    stage list holds the skipped map stage too — a one-stage job only
-    scans and shuffles the kernel's input)."""
-    sc = spark.sparkContext
-    st = sc.statusTracker()
+def _job_plans(spark, group: str) -> dict[int, str]:
+    """{job id: physical plan of its SQL execution} for every Spark job
+    of `group`, found by StatusTracker and the SQL status store."""
+    st = spark.sparkContext.statusTracker()
     jobs = st.getJobIdsForGroup(group)
     store = spark._jsparkSession.sharedState().statusStore()
     plans: dict[int, str] = {}
@@ -141,22 +138,58 @@ def _udf_jobs(spark, group: str) -> list[int]:
             break
         time.sleep(0.2)
     assert len(plans) == len(jobs), "SQL executions not reported"
+    return plans
+
+
+def _udf_jobs(spark, group: str) -> list[int]:
+    """Jobs of `group` that run a pandas UDF: the job's SQL execution
+    plans a FlatMap(Co)GroupsInPandas and the job reads a shuffle (its
+    stage list holds the skipped map stage too — a one-stage job only
+    scans and shuffles the kernel's input)."""
+    st = spark.sparkContext.statusTracker()
     return [
-        j for j in jobs
-        if "InPandas" in plans[j] and len(st.getJobInfo(j).stageIds) >= 2
+        j for j, plan in _job_plans(spark, group).items()
+        if "InPandas" in plan and len(st.getJobInfo(j).stageIds) >= 2
     ]
 
 
-@pytest.mark.parametrize("shape", ["or", "range"])
-def test_one_request_scores_in_one_job(spark, searcher, shape):
-    body = {"query": SHAPES[shape], "size": 5, "track_total_hits": True}
+def _one_request(spark, searcher, body: dict, group: str) -> dict:
+    """One ES `_search` (after a warm-up run) under job group `group`."""
     searcher.es_search_response(body)  # warm
     sc = spark.sparkContext
-    group = f"one-pass-{shape}"
     sc.setJobGroup(group, "one ES _search")
     try:
         resp = searcher.es_search_response(body)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert resp["hits"]["total"]["value"] > 0
+    return resp
+
+
+@pytest.mark.parametrize("shape", ["or", "range"])
+def test_one_request_scores_in_one_job(spark, searcher, shape, monkeypatch):
+    # pin the Spark transport: this index is small enough for the driver
+    monkeypatch.setattr(IndexSearcher, "_LOCAL_MAX_DOCS", 0)
+    body = {"query": SHAPES[shape], "size": 5, "track_total_hits": True}
+    group = f"one-pass-{shape}"
+    _one_request(spark, searcher, body, group)
     assert len(_udf_jobs(spark, group)) == 1
+
+
+# Python-worker operators of a physical plan
+_PYTHON_NODES = ("InPandas", "InArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+@pytest.mark.parametrize("shape", ["term", "range"])
+def test_driver_transport_jobs(spark, searcher, shape):
+    """Under the driver transport a term `_search` with the exact total
+    runs no Spark job at all; the range shape runs exactly one, the
+    allowed-ids docmap scan, with no Python UDF in it."""
+    body = {"query": SHAPES[shape], "size": 5, "track_total_hits": True}
+    assert searcher.search_plan(searcher._es_ast(body))["transport"] == "driver"
+    group = f"driver-{shape}"
+    _one_request(spark, searcher, body, group)
+    plans = _job_plans(spark, group)
+    assert len(plans) == (1 if shape == "range" else 0), plans
+    for plan in plans.values():
+        assert not any(n in plan for n in _PYTHON_NODES), plan
