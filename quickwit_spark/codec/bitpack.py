@@ -41,19 +41,32 @@ def bitpack_encode(values: np.ndarray) -> bytes:
 
 
 def bitpack_decode(buf: bytes, count: int) -> np.ndarray:
-    """Inverse of :func:`bitpack_encode` (needs the value count)."""
+    """Inverse of :func:`bitpack_encode` (needs the value count). A block
+    header or block that runs past the buffer raises ValueError."""
     out = np.empty(count, dtype=np.uint64)
     b = memoryview(buf)
     pos = 0
     done = 0
     while done < count:
         block_len = min(BLOCK_SIZE, count - done)
+        if pos >= len(b):
+            raise ValueError(
+                f"truncated bitpack blob: block header at byte {pos} of "
+                f"{len(b)} ({done} of {count} values decoded)"
+            )
         width = b[pos]
         pos += 1
+        if width > 64:
+            raise ValueError(f"corrupt bitpack blob: block width {width} > 64")
         if width == 0:
             out[done : done + block_len] = 0
         else:
             nbytes = (block_len * width + 7) // 8
+            if pos + nbytes > len(b):
+                raise ValueError(
+                    f"truncated bitpack blob: block of {nbytes} bytes at "
+                    f"byte {pos} of {len(b)}"
+                )
             bits = np.unpackbits(
                 np.frombuffer(b[pos : pos + nbytes], dtype=np.uint8),
                 bitorder="little",

@@ -125,11 +125,21 @@ def block_metadata_grouped(
 
 
 def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
-    """Decode a LEB128 byte blob back to a uint64 array (vectorized)."""
+    """Decode a LEB128 byte blob back to a uint64 array (vectorized).
+
+    A blob that ends on a continuation byte (a truncated last value), or
+    holds other than `count` values, raises ValueError."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if len(b) == 0:
+        if count:
+            raise ValueError(f"expected {count} values, decoded 0")
         return np.zeros(0, dtype=np.uint64)
     is_last = (b & 0x80) == 0
+    if not is_last[-1]:
+        raise ValueError(
+            f"truncated varint blob: byte {len(b) - 1} of {len(b)} is a "
+            "continuation byte"
+        )
     starts = np.flatnonzero(np.concatenate(([True], is_last[:-1])))
     payload = (b & np.uint64(0x7F)).astype(np.uint64)
     # offset of each byte within its value

@@ -22,6 +22,16 @@ Spark-native pipeline:
       → docmap (fast-field/doc-store analog) written per batch
       → manifest commit (segments + per-partition lineage checkpoint)
 
+Two transports run the same `build` generator. A batch of at most
+`_LOCAL_MAX_DOCS` docs and `_LOCAL_MAX_BYTES` estimated Arrow bytes
+(found by a bounded `limit()` probe that ships only row sizes, then one
+collect of the rows) is built on the driver and written
+with pyarrow into the same `inv/batch_id=…/kind=…/` and
+`docs/batch_id=…` layout, with no Spark write job — the reference
+likewise builds each split inside one indexer process. Larger batches,
+and `routing="input"` (its segments are Spark's input partitions), run
+the `mapInArrow` job and the partitioned Spark write.
+
 Scale design: the group-per-partition shape means one segment's docs
 must fit one executor's memory — identical to the reference's
 per-pipeline 2 GB workbench heap (`index_config/mod.rs:42-65`); at
@@ -34,13 +44,24 @@ the staged→published protocol of the reference's Uploader/Publisher.
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import time
+import uuid
 from dataclasses import dataclass, field as dc_field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    MapType,
+    StringType,
+    StructType,
+)
 
 from quickwit_spark.analysis import tokenize_series  # noqa: F401 (query-side parity)
 from quickwit_spark.analysis.tokenizer import tokenize_flat_arrow
@@ -491,6 +512,17 @@ def _rows_to_batch(rows: list[dict], extra_types=()):
 
 _DOCMAP_CHUNK = 1 << 16  # rows per emitted docmap batch (bounds Arrow IPC memory)
 
+# A build batch of at most this many docs and this many estimated Arrow
+# bytes runs on the driver (pyarrow build and write, no Spark write
+# job); anything larger runs the Spark write. Set from the build
+# crossover measured solo and with four search clients on the same
+# driver (CHANGES.md): at 10 k docs the driver build was faster in three
+# of four settings and within run-to-run noise in the fourth; from 30 k
+# docs on it lost in at least one. 8 MiB is twice what 10 k docs of the
+# benchmark corpus hold. 0 pins the Spark transport.
+_LOCAL_MAX_DOCS = 10_000
+_LOCAL_MAX_BYTES = 8 << 20
+
 
 def _key_bound(v):
     """Manifest min/max doc-key bound: int for numeric keys, the raw
@@ -735,6 +767,147 @@ def _batch_ranges(num_partitions: int, num_batches: int) -> list[tuple[int, int]
     return [(int(bounds[i]), int(bounds[i + 1])) for i in range(num_batches)]
 
 
+def _clearly_large(bdf: DataFrame, fraction: float) -> bool:
+    """Zero-job pre-check before the probe: the optimizer's size
+    estimate of the batch's sources, times the batch's share of the
+    pids, is past 32 × `_LOCAL_MAX_BYTES`. Filters do not shrink the
+    estimate, so the margin keeps a small filtered batch of a large
+    source on the probe; past it the probe (one scan of up to
+    `_LOCAL_MAX_DOCS + 1` rows a partition) is skipped. An unknown
+    estimate (Spark's default size, e.g. an RDD source) is not large."""
+    jvm = bdf.sparkSession._jvm
+    est = int(str(bdf._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    unknown = int(jvm.org.apache.spark.sql.internal.SQLConf.get().defaultSizeInBytes())
+    return est < unknown and est * fraction > 32 * _LOCAL_MAX_BYTES
+
+
+def _arrow_bytes(field) -> Column:
+    """Estimated Arrow bytes of one column value: the UTF-8/byte length
+    plus an offset for strings and binaries, the text form's length for
+    nested types, 8 bytes otherwise."""
+    c = F.col(f"`{field.name}`")
+    t = field.dataType
+    if isinstance(t, (StringType, BinaryType)):
+        return F.coalesce(F.octet_length(c), F.lit(0)) + 4
+    if isinstance(t, (ArrayType, MapType, StructType)):
+        return F.coalesce(F.octet_length(c.cast("string")), F.lit(0))
+    return F.lit(8)
+
+
+def _probe_local(bdf: DataFrame):
+    """The batch's rows as one Arrow table when they fit the driver
+    transport, else None. A first query ships only the estimated Arrow
+    bytes of at most `_LOCAL_MAX_DOCS + 1` rows (8 bytes a row), so a
+    large batch never sends its data to the driver; only a batch within
+    both bounds is then collected. A collect that overflows
+    `spark.driver.maxResultSize` means the batch is large."""
+    if _LOCAL_MAX_DOCS <= 0:
+        return None
+    import pyarrow.compute as pc
+
+    size = sum((_arrow_bytes(f) for f in bdf.schema.fields), F.lit(0))
+    try:
+        sizes = bdf.limit(_LOCAL_MAX_DOCS + 1).select(size.alias("b")).toArrow()
+        if sizes.num_rows > _LOCAL_MAX_DOCS or (
+            sizes.num_rows and pc.sum(sizes.column("b")).as_py() > _LOCAL_MAX_BYTES
+        ):
+            return None
+        tbl = bdf.limit(_LOCAL_MAX_DOCS + 1).toArrow()
+    except Exception as e:  # noqa: BLE001 — only the result-size abort
+        if "maxResultSize" not in str(e):
+            raise
+        return None
+    # a source that is not deterministic may have grown in between
+    return tbl if tbl.num_rows <= _LOCAL_MAX_DOCS else None
+
+
+def _replace_dir(src: str | None, dst: str) -> None:
+    """Move `src` to `dst`, replacing whatever a crashed earlier run of
+    the batch left there (the Spark write's dynamic partition
+    overwrite); with `src` None only the old `dst` goes."""
+    if os.path.exists(dst):
+        shutil.rmtree(dst)
+    if src is not None:
+        os.rename(src, dst)
+
+
+def _build_local(tbl, build_fn, schema, inv_dir: str, docs_dir: str,
+                 batch_id: str, int96: bool):
+    """Driver transport of one batch: the `build` generator over the
+    probed rows (it sorts them by (`_pid`, doc_key)), then one pyarrow
+    file per `kind` written into hidden temp dirs (Spark and pyarrow
+    dataset listings skip `.` names) and renamed into `inv/batch_id=…/kind=…/` and `docs/batch_id=…`.
+    Timestamps are written as INT96 like Spark's default, so both
+    transports' files read back with the same types.
+    Returns (kind=seg rows, build secs, write secs)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t0 = time.perf_counter()
+    by_kind: dict[str, list] = {}
+    for rb in build_fn(tbl.to_batches()):
+        t = pa.Table.from_batches([rb]).cast(schema)
+        kinds = pc.unique(t.column("kind")).to_pylist()
+        for k in kinds:
+            part = t if len(kinds) == 1 else t.filter(pc.equal(t.column("kind"), k))
+            by_kind.setdefault(k, []).append(part.drop_columns(["kind"]))
+    t1 = time.perf_counter()
+
+    # leftovers of an earlier run of this batch that crashed mid-write
+    for base in (inv_dir, docs_dir):
+        if os.path.isdir(base):
+            for e in os.listdir(base):
+                if e.startswith(f".tmp-{batch_id}-"):
+                    shutil.rmtree(os.path.join(base, e), ignore_errors=True)
+    tag = uuid.uuid4().hex
+    tmp_inv = f"{inv_dir}/.tmp-{batch_id}-{tag}"
+    tmp_docs = f"{docs_dir}/.tmp-{batch_id}-{tag}"
+    for k, parts in by_kind.items():
+        d = tmp_docs if k == KIND_DOCMAP else f"{tmp_inv}/kind={k}"
+        os.makedirs(d)
+        pq.write_table(
+            pa.concat_tables(parts),
+            f"{d}/part-00000-{tag}.c000.snappy.parquet",
+            use_deprecated_int96_timestamps=int96,
+            store_schema=False,
+        )
+    _replace_dir(tmp_docs if KIND_DOCMAP in by_kind else None,
+                 f"{docs_dir}/batch_id={batch_id}")
+    _replace_dir(tmp_inv if len(by_kind.keys() - {KIND_DOCMAP}) else None,
+                 f"{inv_dir}/batch_id={batch_id}")
+    seg = (
+        pa.concat_tables(by_kind[KIND_SEG]).select(["segment_id", "meta"]).to_pylist()
+        if KIND_SEG in by_kind
+        else []
+    )
+    return seg, t1 - t0, time.perf_counter() - t1
+
+
+def _segment_records(seg_rows: list[dict], batch_id: str, pid_range: list,
+                     doc_mapping_uid: int) -> list[mf.SegmentRecord]:
+    """Manifest records of one batch from its kind=seg rows."""
+    records = []
+    for r in sorted(seg_rows, key=lambda r: r["segment_id"]):
+        m = json.loads(r["meta"])
+        records.append(
+            mf.SegmentRecord(
+                segment_id=r["segment_id"],
+                state=mf.PUBLISHED,
+                partition_id=m["partition_id"],
+                num_docs=m["num_docs"],
+                field_stats=m["field_stats"],
+                lineage={"batch_id": batch_id, "pid_range": pid_range},
+                time_range=m["time_range"],
+                tags=m.get("tags") or [],
+                merge_gen=0,
+                doc_mapping_uid=doc_mapping_uid,
+                metrics={"build_secs": m["build_secs"]},
+            )
+        )
+    return records
+
+
 def _is_additive_extension(old: IndexConfig, new: IndexConfig) -> bool:
     """True iff `new` only ADDS fields/options/stored columns to `old`
     — every old entry reappears byte-identical and all scalar knobs
@@ -841,10 +1014,8 @@ def build_index(
     # building into an existing index MUST reuse the identical config —
     # otherwise new segments would be tokenized/encoded under one config
     # while searchers read another (checked BEFORE any segment publishes)
-    import os as _os
-
     _cfg_path = config_path(index_dir, doc_mapping_uid)
-    if _os.path.exists(_cfg_path):
+    if os.path.exists(_cfg_path):
         with open(_cfg_path) as _f:
             stored = _f.read()
         # compare NORMALIZED configs (round-trip fills defaults) so an
@@ -918,6 +1089,8 @@ def build_index(
             (config.time_column, df.schema[config.time_column].dataType.simpleString())
         )
     out_schema = INV_SCHEMA + ", " + ", ".join(f"`{n}` {t}" for n, t in extra_ddl)
+    # the driver transport casts to the Arrow schema mapInArrow declares
+    local_schema = to_arrow_schema(StructType.fromDDL(out_schema))
     all_records: list[mf.SegmentRecord] = []
     for bi, (lo, hi) in enumerate(_batch_ranges(config.num_partitions, num_batches)):
         batch_id = f"{job_id}-b{bi:04d}"
@@ -936,75 +1109,74 @@ def build_index(
                 )
             continue
         t0 = time.perf_counter()
-        # ONE pass over the corpus: (optionally) shuffle on pid +
-        # in-partition sort → mapInArrow emits postings AND docmap rows
-        # (unified schema) → one write. No persist (at 100 TB,
-        # materializing the corpus a second time was the dominant
-        # non-kernel cost), no window.
-        if config.routing == "input":
-            # no exchange at all: sortWithinPartitions is narrow, _pid
-            # is constant inside each partition
-            part = df.sortWithinPartitions(config.doc_key)
-        else:
+        stages: dict = {}
+        local = None
+        # input routing stays on Spark: its segments ARE the input
+        # partitions
+        if config.routing != "input":
             bdf = df.filter((F.col("_pid") >= lo) & (F.col("_pid") < hi))
-            part = bdf.repartition(hi - lo, "_pid").sortWithinPartitions(
-                "_pid", config.doc_key
+            if not _clearly_large(bdf, (hi - lo) / config.num_partitions):
+                local = _probe_local(bdf)
+                stages["probe"] = round(time.perf_counter() - t0, 4)
+        if local is not None:
+            seg_meta, b_s, w_s = _build_local(
+                local, build_fn, local_schema, inv_dir, docs_dir, batch_id,
+                int96="timestamp_ntz" not in out_schema,
             )
-        out = part.mapInArrow(build_fn, out_schema)
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "kind")
-            .parquet(inv_dir)
-        )
-        # relocate the docmap partition into the docs dataset — a
-        # driver-side metadata rename (O(1) on a filesystem; on an
-        # object store this would be the Hadoop FileSystem.rename of
-        # one directory). Idempotent: a rerun of a crashed batch
-        # rewrites kind=docmap above and replaces the destination.
-        import shutil as _shutil
-
-        src = f"{inv_dir}/batch_id={batch_id}/kind={KIND_DOCMAP}"
-        dst = f"{docs_dir}/batch_id={batch_id}"
-        if _os.path.exists(src):
-            _os.makedirs(docs_dir, exist_ok=True)
-            if _os.path.exists(dst):
-                _shutil.rmtree(dst)
-            _os.rename(src, dst)
-        build_secs = time.perf_counter() - t0
-
-        # read back the tiny seg-meta rows → manifest records (address
-        # the partition directory directly — listing the whole inv
-        # dataset costs seconds at high segment counts). An EMPTY input
-        # writes no partitions at all — a valid zero-segment batch (the
-        # reference publishes an empty index the same way).
-        seg_dir = f"{inv_dir}/batch_id={batch_id}/kind={KIND_SEG}"
-        seg_meta = (
-            spark.read.parquet(seg_dir).select("segment_id", "meta").collect()
-            if _os.path.exists(seg_dir)
-            else []
-        )
-        records = []
-        total_docs = 0
-        for r in seg_meta:
-            m = json.loads(r["meta"])
-            total_docs += m["num_docs"]
-            records.append(
-                mf.SegmentRecord(
-                    segment_id=r["segment_id"],
-                    state=mf.PUBLISHED,
-                    partition_id=m["partition_id"],
-                    num_docs=m["num_docs"],
-                    field_stats=m["field_stats"],
-                    lineage={"batch_id": batch_id, "pid_range": [lo, hi]},
-                    time_range=m["time_range"],
-                    tags=m.get("tags") or [],
-                    merge_gen=0,
-                    doc_mapping_uid=doc_mapping_uid,
-                    metrics={"build_secs": m["build_secs"]},
+            stages.update(build=round(b_s, 4), write=round(w_s, 4))
+        else:
+            # ONE pass over the corpus: (optionally) shuffle on pid +
+            # in-partition sort → mapInArrow emits postings AND docmap
+            # rows (unified schema) → one write. No persist (at 100 TB,
+            # materializing the corpus a second time was the dominant
+            # non-kernel cost), no window.
+            t1 = time.perf_counter()
+            if config.routing == "input":
+                # no exchange at all: sortWithinPartitions is narrow,
+                # _pid is constant inside each partition
+                part = df.sortWithinPartitions(config.doc_key)
+            else:
+                part = bdf.repartition(hi - lo, "_pid").sortWithinPartitions(
+                    "_pid", config.doc_key
                 )
+            out = part.mapInArrow(build_fn, out_schema)
+            (
+                out.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id", "kind")
+                .parquet(inv_dir)
             )
+            # relocate the docmap partition into the docs dataset — a
+            # driver-side metadata rename (O(1) on a filesystem; on an
+            # object store this would be the Hadoop FileSystem.rename of
+            # one directory). Idempotent: a rerun of a crashed batch
+            # rewrites kind=docmap above and replaces the destination.
+            src = f"{inv_dir}/batch_id={batch_id}/kind={KIND_DOCMAP}"
+            if os.path.exists(src):
+                os.makedirs(docs_dir, exist_ok=True)
+                _replace_dir(src, f"{docs_dir}/batch_id={batch_id}")
+            t2 = time.perf_counter()
+            # the tiny seg-meta rows → manifest records, read with
+            # pyarrow from the partition directory (no Spark job, no
+            # listing of the whole inv dataset). An EMPTY input writes
+            # no partitions at all — a valid zero-segment batch (the
+            # reference publishes an empty index the same way).
+            import pyarrow.parquet as pq
+
+            seg_dir = f"{inv_dir}/batch_id={batch_id}/kind={KIND_SEG}"
+            seg_meta = (
+                pq.read_table(seg_dir, columns=["segment_id", "meta"]).to_pylist()
+                if os.path.exists(seg_dir)
+                else []
+            )
+            stages.update(
+                build_write=round(t2 - t1, 4),
+                read_meta=round(time.perf_counter() - t2, 4),
+            )
+        build_secs = time.perf_counter() - t0
+        records = _segment_records(seg_meta, batch_id, [lo, hi], doc_mapping_uid)
+        total_docs = sum(r.num_docs for r in records)
         mf.commit(
             index_dir,
             records,
@@ -1013,6 +1185,8 @@ def build_index(
                     "pid_range": [lo, hi],
                     "docs": total_docs,
                     "docs_per_sec": round(total_docs / max(build_secs, 1e-9), 2),
+                    "transport": "spark" if local is None else "driver",
+                    "stage_secs": stages,
                 }
             },
             kind="build",

@@ -8,12 +8,47 @@ pick physical parallelism per deployment.
 
 from __future__ import annotations
 
+import hashlib
+import io
 import os
-import shutil
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+
+def package_zip(pkg_dir: str) -> str:
+    """Zip the `.py` files of the package tree `pkg_dir` into the temp
+    dir under a content-hashed name and return its path. The zip is
+    byte-deterministic (sorted entries, fixed timestamps), so the same
+    tree always maps to the same file and two different trees (e.g. two
+    checkouts running at once) never overwrite each other's zip."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, dirs, files in os.walk(pkg_dir):
+            dirs.sort()
+            if "__pycache__" in root:
+                continue
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    info = zipfile.ZipInfo(
+                        os.path.join("quickwit_spark", os.path.relpath(full, pkg_dir)),
+                        date_time=(1980, 1, 1, 0, 0, 0),
+                    )
+                    info.compress_type = zipfile.ZIP_DEFLATED
+                    with open(full, "rb") as fh:
+                        zf.writestr(info, fh.read())
+    data = buf.getvalue()
+    digest = hashlib.sha256(data).hexdigest()[:16]
+    dest = os.path.join(tempfile.gettempdir(), f"quickwit_spark_pkg-{digest}.zip")
+    if not os.path.exists(dest):
+        # write-then-rename: a concurrent reader never sees a partial zip
+        fd, tmp = tempfile.mkstemp(suffix=".zip", prefix="quickwit_spark_")
+        with os.fdopen(fd, "wb") as f:
+            f.write(data)
+        os.replace(tmp, dest)
+    return dest
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -27,22 +62,7 @@ def ship_package(spark: SparkSession) -> None:
     import quickwit_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(quickwit_spark.__file__))
-    fd, tmp = tempfile.mkstemp(suffix=".zip", prefix="quickwit_spark_")
-    os.close(fd)
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "quickwit_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    dest = os.path.join(tempfile.gettempdir(), "quickwit_spark_pkg.zip")
-    shutil.move(tmp, dest)
-    spark.sparkContext.addPyFile(dest)
+    spark.sparkContext.addPyFile(package_zip(pkg_dir))
 
 
 def get_spark(

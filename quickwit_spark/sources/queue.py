@@ -45,6 +45,8 @@ distributed batch path).
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
 import time
@@ -177,6 +179,40 @@ class FileQueue(Queue):
     def _lease_path(self, name: str) -> str:
         return os.path.join(self.leases, name + ".lease")
 
+    @contextlib.contextmanager
+    def _lease_lock(self, name: str, wait: bool = True):
+        """Exclusive flock on the lease's lock file for the with block,
+        so a lease's ownership check and its rewrite, break or delete
+        are one step for every consumer process. Yields False without
+        the lock when `wait` is False and another consumer holds it."""
+        path = self._lease_path(name) + ".lock"
+        while True:
+            fd = os.open(path, os.O_RDWR | os.O_CREAT, 0o644)
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | (0 if wait else fcntl.LOCK_NB))
+            except BlockingIOError:
+                os.close(fd)
+                yield False
+                return
+            try:
+                if os.fstat(fd).st_ino == os.stat(path).st_ino:
+                    break
+            except FileNotFoundError:
+                pass
+            # acknowledged (lock file unlinked) while we waited: retry
+            # on the current file
+            os.close(fd)
+        try:
+            yield True
+        finally:
+            # the lock of a message that is gone (acked, maybe while
+            # this consumer listed or waited) goes too, still locked: a
+            # waiter notices and retries on a fresh file
+            if not os.path.exists(os.path.join(self.msgs, name)):
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(path)
+            os.close(fd)
+
     def receive(self, max_messages, visibility_secs):
         now = self.now()
         out = []
@@ -185,47 +221,58 @@ class FileQueue(Queue):
                 break
             if name.startswith("."):
                 continue
-            lease_path = self._lease_path(name)
-            try:
-                with open(lease_path) as f:
-                    lease = json.load(f)
-                if lease.get("deadline", 0) > now:
-                    continue  # live lease: hidden from this consumer
-                expired = True
-            except FileNotFoundError:
-                expired = False
-            except (json.JSONDecodeError, OSError):
-                expired = True  # torn lease write: treat as expired
-            if expired:
-                # break the expired lease by RENAME, not unlink: the
-                # rename succeeds for exactly one racing consumer
-                # (the loser gets ENOENT), so a racer can never
-                # unlink the winner's just-created fresh lease
-                doomed = lease_path + f".break-{uuid.uuid4().hex}"
-                try:
-                    os.rename(lease_path, doomed)
-                except (FileNotFoundError, OSError):
-                    continue  # another consumer broke (and claimed) it
-                os.unlink(doomed)
-            ack_id = uuid.uuid4().hex
-            deadline = now + visibility_secs
-            try:
-                # O_EXCL create IS the claim: exactly one racing
-                # consumer wins this message
-                fd = os.open(lease_path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-            except FileExistsError:
-                continue
-            with os.fdopen(fd, "w") as f:
-                json.dump({"ack_id": ack_id, "deadline": deadline}, f)
-            try:
-                with open(os.path.join(self.msgs, name), "rb") as f:
-                    payload = f.read()
-            except FileNotFoundError:
-                os.unlink(lease_path)
-                continue  # acked by another consumer mid-claim
-            self._ack_names[ack_id] = name
-            out.append(QueueMessage(ack_id, name, payload, deadline))
+            # a lease another consumer is extending, claiming or acking
+            # right now is skipped, not waited for
+            with self._lease_lock(name, wait=False) as locked:
+                msg = locked and self._claim(name, now, visibility_secs)
+            if msg:
+                self._ack_names[msg.ack_id] = name
+                out.append(msg)
         return out
+
+    def _claim(self, name: str, now: float, visibility_secs: float):
+        """Claim message `name` under its lease lock: break an expired
+        lease, create a fresh one. None when the lease is live or the
+        message is gone."""
+        lease_path = self._lease_path(name)
+        try:
+            with open(lease_path) as f:
+                lease = json.load(f)
+            if lease.get("deadline", 0) > now:
+                return None  # live lease: hidden from this consumer
+            expired = True
+        except FileNotFoundError:
+            expired = False
+        except (json.JSONDecodeError, OSError):
+            expired = True  # torn lease write: treat as expired
+        if expired:
+            # break the expired lease by RENAME, not unlink: the rename
+            # succeeds for exactly one racing consumer (the loser gets
+            # ENOENT), so a racer can never unlink the winner's
+            # just-created fresh lease
+            doomed = lease_path + f".break-{uuid.uuid4().hex}"
+            try:
+                os.rename(lease_path, doomed)
+            except OSError:
+                return None  # another consumer broke (and claimed) it
+            os.unlink(doomed)
+        ack_id = uuid.uuid4().hex
+        deadline = now + visibility_secs
+        try:
+            # O_EXCL create IS the claim: exactly one racing consumer
+            # wins this message
+            fd = os.open(lease_path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
+        except FileExistsError:
+            return None
+        with os.fdopen(fd, "w") as f:
+            json.dump({"ack_id": ack_id, "deadline": deadline}, f)
+        try:
+            with open(os.path.join(self.msgs, name), "rb") as f:
+                payload = f.read()
+        except FileNotFoundError:
+            os.unlink(lease_path)
+            return None  # acked by another consumer mid-claim
+        return QueueMessage(ack_id, name, payload, deadline)
 
     def _owns(self, name: str, ack_id: str) -> bool:
         try:
@@ -234,9 +281,10 @@ class FileQueue(Queue):
         except (FileNotFoundError, json.JSONDecodeError, OSError):
             return False
 
-    def _names_for(self, ack_ids) -> list[str]:
-        """Message names for delivery ids: O(1) via this instance's
-        delivery map, directory scan only for foreign ack_ids."""
+    def _names_for(self, ack_ids) -> list[tuple[str, str]]:
+        """(ack_id, message name) for delivery ids: O(1) via this
+        instance's delivery map, directory scan only for foreign
+        ack_ids."""
         ids = set(ack_ids)
         named = [
             (ack, self._ack_names[ack]) for ack in ids if ack in self._ack_names
@@ -244,6 +292,8 @@ class FileQueue(Queue):
         unknown = ids - {ack for ack, _ in named}
         if unknown:
             for lease in os.listdir(self.leases):
+                if not lease.endswith(".lease"):
+                    continue  # lock, temp and broken-lease files
                 name = lease[: -len(".lease")]
                 try:
                     with open(self._lease_path(name)) as f:
@@ -254,33 +304,41 @@ class FileQueue(Queue):
                     named.append((ack, name))
         # a lease may have been broken and re-claimed since delivery —
         # only act on names this ack_id still owns
-        return [name for ack, name in named if self._owns(name, ack)]
+        return [(ack, name) for ack, name in named if self._owns(name, ack)]
 
     def extend_visibility(self, ack_id, visibility_secs):
-        for name in self._names_for([ack_id]):
-            tmp = self._lease_path(name) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "ack_id": ack_id,
-                        "deadline": self.now() + visibility_secs,
-                    },
-                    f,
-                )
-            os.replace(tmp, self._lease_path(name))
+        for _ack, name in self._names_for([ack_id]):
+            with self._lease_lock(name):
+                # re-checked under the lock: a consumer that broke and
+                # re-claimed the lease since the check above keeps it
+                if not self._owns(name, ack_id):
+                    continue
+                lease_path = self._lease_path(name)
+                tmp = f"{lease_path}.tmp-{uuid.uuid4().hex}"
+                with open(tmp, "w") as f:
+                    json.dump(
+                        {
+                            "ack_id": ack_id,
+                            "deadline": self.now() + visibility_secs,
+                        },
+                        f,
+                    )
+                os.replace(tmp, lease_path)
 
     def acknowledge(self, ack_ids):
-        for name in self._names_for(ack_ids):
-            # delete the message first: a crash between the two leaves
-            # a dangling lease (harmless — receive skips missing msgs)
-            try:
-                os.unlink(os.path.join(self.msgs, name))
-            except FileNotFoundError:
-                pass
-            try:
-                os.unlink(self._lease_path(name))
-            except FileNotFoundError:
-                pass
+        for ack, name in self._names_for(ack_ids):
+            with self._lease_lock(name):
+                if not self._owns(name, ack):
+                    continue  # re-claimed since the check above
+                # delete the message first: a crash between the unlinks
+                # leaves a dangling lease (harmless — receive skips
+                # missing msgs). The lock file goes on release.
+                for path in (os.path.join(self.msgs, name),
+                             self._lease_path(name)):
+                    try:
+                        os.unlink(path)
+                    except FileNotFoundError:
+                        pass
         for ack in ack_ids:
             self._ack_names.pop(ack, None)
 

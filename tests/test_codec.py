@@ -133,3 +133,48 @@ def test_bitpack_smaller_than_varint_on_small_deltas():
 
     deltas = np.ones(1280, dtype=np.uint64)  # dense posting list
     assert len(bitpack_encode(deltas)) < len(varint_encode(deltas))
+
+
+# ---------------------------------------------------------------------------
+# truncated blobs raise instead of decoding wrong values
+# ---------------------------------------------------------------------------
+
+_VALUES = np.array([3, 397, 0, 2**35, 127, 128, 2**63 - 1], dtype=np.uint64)
+_VARINT = varint_encode(_VALUES)
+
+
+@pytest.mark.parametrize("cut", range(len(_VARINT)))
+def test_varint_truncated_blob_raises(cut):
+    with pytest.raises(ValueError):
+        varint_decode(_VARINT[:cut], len(_VALUES))
+
+
+@pytest.mark.parametrize(
+    "cut", [c for c in range(1, len(_VARINT)) if _VARINT[c - 1] & 0x80]
+)
+def test_varint_continuation_ending_raises_without_count(cut):
+    with pytest.raises(ValueError, match="truncated"):
+        varint_decode(_VARINT[:cut])
+
+
+def test_truncated_docs_blob_is_not_a_wrong_hit():
+    docs, tfs = encode_postings(np.array([3, 400]), np.array([1, 2]))
+    with pytest.raises(ValueError, match="truncated"):
+        decode_postings(docs[:-1], tfs, 2)
+
+
+# three blocks: full width-9, all-zero width-0, short width-2
+_BP_VALUES = np.concatenate(
+    [np.arange(BLOCK_SIZE) * 3, np.zeros(BLOCK_SIZE), np.arange(40) % 4]
+).astype(np.uint64)
+_BITPACK = bitpack_encode(_BP_VALUES)
+
+
+@pytest.mark.parametrize("cut", range(len(_BITPACK)))
+def test_bitpack_truncated_blob_raises(cut):
+    with pytest.raises(ValueError, match="truncated"):
+        bitpack_decode(_BITPACK[:cut], len(_BP_VALUES))
+
+
+def test_bitpack_full_blob_still_decodes():
+    assert np.array_equal(bitpack_decode(_BITPACK, len(_BP_VALUES)), _BP_VALUES)

@@ -4,6 +4,7 @@ shard table, visibility leases, stale-owner re-acquisition, and
 deduplication-window GC."""
 
 import json
+import os
 
 import pytest
 
@@ -82,6 +83,89 @@ def test_file_queue_claim_is_exclusive(tmp_path):
         {m.partition_id for m in got_a2}
     )
     assert len(got_b) + len(got_a2) == 6
+
+
+def _lease(q: FileQueue, name: str) -> dict:
+    with open(q._lease_path(name)) as f:
+        return json.load(f)
+
+
+@pytest.mark.parametrize("op", ["extend", "ack"])
+def test_file_queue_stale_consumer_cannot_stomp_reclaimed_lease(tmp_path, op):
+    """Consumer a's lease expires; consumer b breaks and re-claims it in
+    the window between a's ownership check and a's write. a's extend
+    (or ack) must then leave b's lease alone: the lease on disk always
+    belongs to whoever last claimed the message."""
+    clock = Clock()
+    a = FileQueue(str(tmp_path / "q"), now_fn=clock)
+    b = FileQueue(str(tmp_path / "q"), now_fn=clock)
+    a.send("m0", b"{}")
+    (stale,) = a.receive(10, 30)
+    clock.t += 31  # a's lease has expired
+    b_got = []
+    real_owns = a._owns
+
+    def racing_owns(name, ack_id):
+        owned = real_owns(name, ack_id)
+        b_got.extend(b.receive(10, 30))  # b acts right after the check
+        return owned
+
+    a._owns = racing_owns
+    if op == "extend":
+        a.extend_visibility(stale.ack_id, 300)
+    else:
+        a.acknowledge([stale.ack_id])
+    assert [m.partition_id for m in b_got] == ["m0"]
+    assert _lease(b, "m0")["ack_id"] == b_got[0].ack_id
+    assert os.path.exists(os.path.join(b.msgs, "m0"))
+    # b still owns it: its extend and ack work
+    b.extend_visibility(b_got[0].ack_id, 300)
+    assert _lease(b, "m0")["deadline"] == clock.t + 300
+    b.acknowledge([b_got[0].ack_id])
+    assert os.listdir(b.msgs) == [] and os.listdir(b.leases) == []
+
+
+def test_file_queue_receive_skips_a_locked_lease(tmp_path):
+    """While one consumer holds a lease's lock (mid extend/ack), another
+    consumer's receive skips that message instead of claiming it."""
+    clock = Clock()
+    a = FileQueue(str(tmp_path / "q"), now_fn=clock)
+    b = FileQueue(str(tmp_path / "q"), now_fn=clock)
+    a.send("m0", b"{}")
+    a.send("m1", b"{}")
+    with a._lease_lock("m0") as locked:
+        assert locked
+        assert [m.partition_id for m in b.receive(10, 30)] == ["m1"]
+    assert [m.partition_id for m in b.receive(10, 30)] == ["m0"]
+
+
+@pytest.mark.parametrize("op", ["receive", "extend"])
+def test_file_queue_ack_race_leaves_no_lock_files(tmp_path, op):
+    """Consumer b acks a message right after consumer a listed it (or
+    looked up its own stale lease): a's claim or extend finds it gone
+    and must not leave a lease or lock file behind."""
+    clock = Clock()
+    a = FileQueue(str(tmp_path / "q"), now_fn=clock)
+    b = FileQueue(str(tmp_path / "q"), now_fn=clock)
+    a.send("m0", b"{}")
+    if op == "extend":
+        (stale,) = a.receive(10, 30)
+        clock.t += 31
+    (got,) = b.receive(10, 30)
+    real_lock = a._lease_lock
+
+    def racing_lock(name, wait=True):
+        b.acknowledge([got.ack_id])  # b acks before a takes the lock
+        return real_lock(name, wait)
+
+    a._lease_lock = racing_lock
+    if op == "receive":
+        clock.t += 31  # b's lease expired: a would claim it
+        assert a.receive(10, 30) == []
+    else:
+        a._names_for = lambda ids: [(stale.ack_id, "m0")]  # looked up pre-ack
+        a.extend_visibility(stale.ack_id, 300)
+    assert os.listdir(a.msgs) == [] and os.listdir(a.leases) == []
 
 
 # ------------------------------------------------------------ shard table
