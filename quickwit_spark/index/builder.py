@@ -39,10 +39,14 @@ per-pipeline 2 GB workbench heap (`index_config/mod.rs:42-65`); at
 reference's own 10M-doc split target. Only manifest-published segments
 are ever searched, so partially written batches are invisible —
 the staged→published protocol of the reference's Uploader/Publisher.
+Before a batch commits, the docs dataset's Spark read schema is
+recorded next to the index config (`docs_schema_path`), so searchers
+and merges open the datasets without a schema-inference job.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -58,8 +62,11 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    DataType,
+    IntegerType,
     MapType,
     StringType,
+    StructField,
     StructType,
 )
 
@@ -954,6 +961,135 @@ def docs_path(index_dir: str, doc_mapping_uid: int = 0) -> str:
     return f"{index_dir}/docs"
 
 
+# ---------------------------------------------------------- read schemas
+#
+# Readers open the datasets with fixed Spark schemas instead of
+# inferring them from parquet footers: inference is a Spark job per
+# dataset on every open and refresh. The reference likewise opens a
+# split from metadata written when it was published, never from the
+# files themselves. inv/ has one fixed schema; each docs generation's
+# schema is recorded by the builder next to its index config.
+
+INV_READ_SCHEMA = INV_SCHEMA + ", batch_id string"
+
+
+def docs_schema_path(index_dir: str, doc_mapping_uid: int = 0) -> str:
+    """The recorded Spark read schema of one docs generation."""
+    if doc_mapping_uid:
+        return f"{index_dir}/_manifest/docs_schema.uid{doc_mapping_uid}.json"
+    return f"{index_dir}/_manifest/docs_schema.json"
+
+
+def load_docs_schema(index_dir: str, doc_mapping_uid: int = 0) -> StructType | None:
+    """The recorded docs read schema, or None for an index written
+    before schemas were recorded."""
+    p = docs_schema_path(index_dir, doc_mapping_uid)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return StructType.fromJson(json.load(f))
+
+
+def read_inv(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The inverted-index dataset, projected to `_INV_COLUMNS`. The
+    docmap columns builder-written inv files also carry (all-null
+    there) are never read: a later doc-mapping generation may retype
+    them."""
+    return (
+        spark.read.schema(INV_READ_SCHEMA)
+        .parquet(f"{index_dir}/inv")
+        .select(*_INV_COLUMNS)
+    )
+
+
+def read_docs(spark: SparkSession, index_dir: str, doc_mapping_uid: int = 0) -> DataFrame:
+    """One docs generation: segment_id, doc_id, doc_key, the stored and
+    time columns, batch_id. Batches that lack a column added later read
+    it as null. An index without a recorded schema infers it by merging
+    every file's footer (one Spark job) and hides the all-null
+    inverted-index columns of builder-written files."""
+    path = docs_path(index_dir, doc_mapping_uid)
+    schema = load_docs_schema(index_dir, doc_mapping_uid)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    return (
+        spark.read.option("mergeSchema", "true")
+        .parquet(path)
+        .drop(*[c for c in _INV_COLUMNS if c != "segment_id"])
+    )
+
+
+def _nullable(t: DataType) -> DataType:
+    """`t` with every field, element and value nullable, as Spark reads
+    parquet."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType))
+    return t
+
+
+def _merge_type(old: DataType, new: DataType, path: str) -> DataType:
+    """`old` widened by the fields `new` adds, recursively (Spark's
+    parquet schema merge); any other difference is a retype."""
+    if isinstance(old, StructType) and isinstance(new, StructType):
+        return _merge_fields(old.fields, new.fields, f"{path}.")
+    if isinstance(old, ArrayType) and isinstance(new, ArrayType):
+        return ArrayType(_merge_type(old.elementType, new.elementType, path))
+    if isinstance(old, MapType) and isinstance(new, MapType):
+        return MapType(
+            _merge_type(old.keyType, new.keyType, path),
+            _merge_type(old.valueType, new.valueType, path),
+        )
+    if old != new:
+        raise ValueError(
+            f"column {path!r} is {old.simpleString()} in this index but "
+            f"{new.simpleString()} in the new batch; a column keeps its "
+            "type (retyping needs a doc-mapping update)"
+        )
+    return old
+
+
+def _merge_fields(old: list, new: list, prefix: str = "") -> StructType:
+    """`old` fields in place (widened), then the fields only `new` has."""
+    new_by_name = {f.name: f for f in new}
+    old_names = {f.name for f in old}
+    out = [
+        StructField(
+            f.name,
+            _merge_type(f.dataType, new_by_name[f.name].dataType, prefix + f.name)
+            if f.name in new_by_name
+            else f.dataType,
+        )
+        for f in old
+    ]
+    return StructType(out + [f for f in new if f.name not in old_names])
+
+
+def _docs_schema(spark, index_dir: str, doc_mapping_uid: int,
+                 docmap_cols: list, df_schema: StructType):
+    """(merged docs read schema, whether it differs from the recorded
+    one) for a batch whose docmap columns are `docmap_cols` ((name,
+    source column) pairs). A generation written before schemas were
+    recorded starts from its inferred schema, so the record also covers
+    its older batches. Raises ValueError when the batch retypes a
+    column."""
+    recorded = load_docs_schema(index_dir, doc_mapping_uid)
+    base = recorded
+    if base is None and glob.glob(f"{docs_path(index_dir, doc_mapping_uid)}/*/*.parquet"):
+        base = read_docs(spark, index_dir, doc_mapping_uid).schema
+    batch = [StructField("segment_id", StringType())] + [
+        StructField(n, IntegerType() if n == "doc_id" else _nullable(df_schema[src].dataType))
+        for n, src in docmap_cols
+    ]
+    old = [f for f in (base.fields if base is not None else []) if f.name != "batch_id"]
+    merged = _merge_fields(old, batch)
+    merged = StructType(merged.fields + [StructField("batch_id", StringType())])
+    return merged, recorded is None or merged != recorded
+
+
 def build_index(
     spark: SparkSession,
     df: DataFrame,
@@ -1015,7 +1151,8 @@ def build_index(
     # otherwise new segments would be tokenized/encoded under one config
     # while searchers read another (checked BEFORE any segment publishes)
     _cfg_path = config_path(index_dir, doc_mapping_uid)
-    if os.path.exists(_cfg_path):
+    write_cfg = not os.path.exists(_cfg_path)
+    if not write_cfg:
         with open(_cfg_path) as _f:
             stored = _f.read()
         # compare NORMALIZED configs (round-trip fills defaults) so an
@@ -1043,14 +1180,7 @@ def build_index(
                     "config; refusing to mix configs (only additive "
                     "field additions are allowed)"
                 )
-            _write_config_atomic(_cfg_path, config)
-    else:
-        # persist BEFORE any batch commits (validated above): with the
-        # old persist-after-success order, a crash between the first
-        # batch commit and the config write let a retry with a
-        # DIFFERENT config pass the guard — mixing analyzers/codecs
-        # across segments of one index with no error
-        _write_config_atomic(_cfg_path, config)
+            write_cfg = True
     if transform is not None:
         df = transform(df)
     if config.time_column is not None:
@@ -1058,6 +1188,28 @@ def build_index(
         # field at ingest (doc processor parse failure; the tag_fields /
         # qw_search_api scenarios count on those docs being absent)
         df = df.filter(F.col(config.time_column).isNotNull())
+    # docmap output columns (name, source column): doc_id is positional
+    docmap_cols = [("doc_id", None), ("doc_key", config.doc_key)]
+    docmap_cols += [(c, c) for c in config.stored_columns]
+    if config.time_column and config.time_column not in config.stored_columns:
+        docmap_cols.append((config.time_column, config.time_column))
+    # raises on a retyped column, before anything is written
+    docs_schema, docs_schema_changed = _docs_schema(
+        spark, index_dir, doc_mapping_uid, docmap_cols, df.schema
+    )
+    if write_cfg:
+        # persist BEFORE any batch commits (validated above): with the
+        # old persist-after-success order, a crash between the first
+        # batch commit and the config write let a retry with a
+        # DIFFERENT config pass the guard — mixing analyzers/codecs
+        # across segments of one index with no error
+        _write_atomic(_cfg_path, config.to_json())
+    if docs_schema_changed:
+        # before any batch commits, so a searcher that sees a segment
+        # always reads its columns
+        _write_atomic(
+            docs_schema_path(index_dir, doc_mapping_uid), docs_schema.json()
+        )
     inv_dir = f"{index_dir}/inv"
     docs_dir = docs_path(index_dir, doc_mapping_uid)
 
@@ -1081,13 +1233,9 @@ def build_index(
     build_fn = _make_build_fn_arrow(config, job_id)
     # unified mapInArrow output schema: inverted-index columns + the
     # typed docmap columns (doc_id, doc_key, stored, time)
-    extra_ddl = [("doc_id", "int"), ("doc_key", df.schema[config.doc_key].dataType.simpleString())]
-    for c in config.stored_columns:
-        extra_ddl.append((c, df.schema[c].dataType.simpleString()))
-    if config.time_column and config.time_column not in config.stored_columns:
-        extra_ddl.append(
-            (config.time_column, df.schema[config.time_column].dataType.simpleString())
-        )
+    extra_ddl = [("doc_id", "int")] + [
+        (n, df.schema[c].dataType.simpleString()) for n, c in docmap_cols[1:]
+    ]
     out_schema = INV_SCHEMA + ", " + ", ".join(f"`{n}` {t}" for n, t in extra_ddl)
     # the driver transport casts to the Arrow schema mapInArrow declares
     local_schema = to_arrow_schema(StructType.fromDDL(out_schema))
@@ -1197,18 +1345,14 @@ def build_index(
     return all_records
 
 
-def _write_config_atomic(cfg_path: str, config: "IndexConfig") -> None:
+def _write_atomic(path: str, text: str) -> None:
     """tmp+rename like mf.commit: a concurrent searcher re-reading the
-    config must never observe a truncated/partial file (a plain
-    open('w') truncates before writing)."""
-    import os
-
-    os.makedirs(os.path.dirname(cfg_path), exist_ok=True)
-    tmp = os.path.join(
-        os.path.dirname(cfg_path), f".tmp-{os.path.basename(cfg_path)}"
-    )
+    config or the read schema must never observe a truncated/partial
+    file (a plain open('w') truncates before writing)."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{os.path.basename(path)}")
     with open(tmp, "w") as f:
-        f.write(config.to_json())
+        f.write(text)
         f.flush()
         os.fsync(f.fileno())
-    os.rename(tmp, cfg_path)
+    os.rename(tmp, path)

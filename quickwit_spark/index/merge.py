@@ -81,6 +81,9 @@ from quickwit_spark.index.builder import (
     KIND_POSTINGS,
     KIND_SEG,
     KIND_STATS,
+    docs_path,
+    read_docs,
+    read_inv,
 )
 
 
@@ -407,12 +410,8 @@ def _write_permutation(
     (segment_id, old_id, doc_key) rows; written as a parquet sidecar
     under the deletes compaction dir so the janitor GCs it with the
     op."""
-    from quickwit_spark.index.builder import _INV_COLUMNS as _IC
-    from quickwit_spark.index.builder import docs_path as _dp
-
     docs = (
-        spark.read.parquet(_dp(index_dir, doc_mapping_uid))
-        .drop(*[c for c in _IC if c != "segment_id"])
+        read_docs(spark, index_dir, doc_mapping_uid)
         .filter(F.col("segment_id").isin(input_ids))
         .select("segment_id", "doc_id", "doc_key")
     )
@@ -471,9 +470,6 @@ def execute_merge(
     docids COMPACT down, and the published stats reflect live docs only."""
     import time as _time
 
-    from quickwit_spark.index.builder import _INV_COLUMNS as _IC
-    from quickwit_spark.index.builder import docs_path as _docs_path
-
     t_start = _time.perf_counter()
     segs = {s.segment_id: s for s in mf.live_segments(index_dir)}
     inputs = [segs[sid] for sid in op.segment_ids]
@@ -514,6 +510,19 @@ def execute_merge(
     perm_path = _write_permutation(
         spark, index_dir, op.op_id, input_ids, tomb_path, op.doc_mapping_uid
     )
+    # per-stage wall seconds, stamped into the merge checkpoint like a
+    # build's: the tombstone compaction and the permutation sidecar,
+    # the inv and docs rewrites, and the manifest records up to the
+    # commit
+    t_mark = _time.perf_counter()
+    stages = {"permutation": round(t_mark - t_start, 4)}
+
+    def stage(name: str) -> None:
+        nonlocal t_mark
+        now = _time.perf_counter()
+        stages[name] = round(now - t_mark, 4)
+        t_mark = now
+
     field_stats: dict[str, dict] = {}
     for s in inputs:
         corr = corrections.get(s.segment_id, {})
@@ -546,15 +555,7 @@ def execute_merge(
     k1 = float(_cfg_doc.get("k1", 1.2))
     b = float(_cfg_doc.get("b", 0.75))
 
-    # project to the fixed inverted-index columns: the unified-schema
-    # doc columns embedded in inv files may be RETYPED by a later
-    # doc-mapping generation, and decoding one from a foreign
-    # generation's file would fail the scan
-    inv = (
-        spark.read.parquet(f"{index_dir}/inv")
-        .select(*_IC)
-        .filter(F.col("segment_id").isin(input_ids))
-    )
+    inv = read_inv(spark, index_dir).filter(F.col("segment_id").isin(input_ids))
 
     def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         fld, term = key[0], key[1]
@@ -784,17 +785,15 @@ def execute_merge(
         .partitionBy("batch_id", "kind")
         .parquet(f"{index_dir}/inv")
     )
+    stage("inv_rewrite")
 
     # docmap rewrite: permutation lookup drops doomed rows and assigns
-    # the doc_key-order docids; stamp the merged segment id.
-    # builder-written docmap files carry the (all-null) inverted-index
-    # columns of the unified single-pass schema; drop them so merged
-    # docmaps store only the typed doc columns (no-op when absent)
-    _ddir = _docs_path(index_dir, op.doc_mapping_uid)
-    docs = (
-        spark.read.parquet(_ddir)
-        .drop(*[c for c in _IC if c != "segment_id"])
-        .filter(F.col("segment_id").isin(input_ids))
+    # the doc_key-order docids; stamp the merged segment id. Merged
+    # docmaps store only the typed doc columns, every batch's columns
+    # (the read schema covers columns only newer batches carry)
+    _ddir = docs_path(index_dir, op.doc_mapping_uid)
+    docs = read_docs(spark, index_dir, op.doc_mapping_uid).filter(
+        F.col("segment_id").isin(input_ids)
     )
 
     def remap(batches):
@@ -820,6 +819,7 @@ def execute_merge(
         .partitionBy("batch_id")
         .parquet(_ddir)
     )
+    stage("docs_rewrite")
 
     merge_secs = _time.perf_counter() - t_start
     record = mf.SegmentRecord(
@@ -857,10 +857,16 @@ def execute_merge(
         )
         for s in inputs
     ]
+    stage("publish")
     mf.commit(
         index_dir,
         [record, *replaced],
-        checkpoint={op.op_id: {"inputs": [s.segment_id for s in inputs]}},
+        checkpoint={
+            op.op_id: {
+                "inputs": [s.segment_id for s in inputs],
+                "stage_secs": stages,
+            }
+        },
         kind="merge",
     )
     return record

@@ -587,38 +587,15 @@ class IndexSearcher:
             self._dfreq_fetched = set()
             self._arrow = _ArrowSnapshot(frozenset(), None, None, {})
             return
-        # re-list the parquet datasets once per refresh, not per query
-        self._inv = self.spark.read.parquet(f"{self.index_dir}/inv")
-        if self._multi_gen:
-            # generations may retype the unified-schema doc columns the
-            # builder embeds in inv files (all-null outside kind=docmap)
-            # — project to the fixed inverted-index columns so no
-            # consumer ever decodes a conflicting parquet column
-            from quickwit_spark.index.builder import _INV_COLUMNS
+        # re-list the parquet datasets once per refresh, not per query,
+        # with their fixed and recorded schemas: no inference job
+        from quickwit_spark.index.builder import read_docs, read_inv
 
-            self._inv = self._inv.select(*_INV_COLUMNS)
-        # the builder writes docmap files through the unified
-        # inverted-index schema (single-pass build); hide the
-        # index-only columns — always all-null here — from every
-        # docmap consumer (drop is a no-op where a file predates the
-        # unified layout)
-        from quickwit_spark.index.builder import _INV_COLUMNS
-
-        # mergeSchema: additive dynamic evolution means newer batches
-        # carry docmap columns older files lack (read as null there)
-        from quickwit_spark.index.builder import docs_path
-
-        def _read_docs(g: int):
-            return (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(docs_path(self.index_dir, g))
-                .drop(*[c for c in _INV_COLUMNS if c != "segment_id"])
-            )
-
+        self._inv = read_inv(self.spark, self.index_dir)
         uids = sorted({s.doc_mapping_uid for s in self.segments})
         if uids == [0] and self.current_uid == 0:
             # the no-update common case: exactly the classic read
-            self._docs = _read_docs(0)
+            self._docs = read_docs(self.spark, self.index_dir, 0)
         else:
             # doc-mapping generations: each one is its own dataset with
             # its own schema; older generations convert to the CURRENT
@@ -629,7 +606,7 @@ class IndexSearcher:
             )
 
             self._docs = align_generations(
-                {g: _read_docs(g) for g in uids},
+                {g: read_docs(self.spark, self.index_dir, g) for g in uids},
                 self.current_uid,
                 self.config_by_uid,
             )
@@ -660,7 +637,7 @@ class IndexSearcher:
         """pyarrow datasets over inv/ and, for a single doc-mapping
         generation, docs/ — listed once per refresh like the Spark
         frames. The docs dataset takes its schema from the Spark read
-        (mergeSchema over dynamic-mapping batches), limited to the
+        (the recorded schema, every batch's columns), limited to the
         column types `_arrow_pylist` converts."""
         from quickwit_spark.index.builder import docs_path
 
@@ -1792,14 +1769,7 @@ class IndexSearcher:
         # an ES `_source` listing a sort field must not read back null.
         # Unknown fields are silently absent like the score path
         # (reference filter_source semantics), not an AnalysisException.
-        doc_cols_avail = set(self.docs().columns)
-        fetch_cols = list(
-            dict.fromkeys(
-                c
-                for c in (fetch or [])
-                if c != "doc_key" and self._fcol(c) in doc_cols_avail
-            )
-        )
+        fetch_cols = self._fetch_cols(fetch)
         ast, fast_filter, seg_ids = (
             _resolved if _resolved is not None else self._resolve(query, time_range)
         )
@@ -1872,23 +1842,39 @@ class IndexSearcher:
     # analysis, so the pairs are broadcast into a semi join instead
     _FETCH_IN_MAX = 4096
 
-    def _hit_cols(self, fetch, snippet_fields) -> tuple[list[str], list[str]]:
-        """(fetch columns, fetch + snippet source columns) of a score
-        search. ES `_source`/fetch is a FILTER over the stored doc:
-        unknown fields are silently absent from the hit (reference
-        filter_source, `rest_handler.rs:674-742`), never an error.
-        Snippet fields DO validate — the reference 400s "the snippet
-        field `x` must be stored" (`root.rs:313-335`)."""
+    def _fetch_cols(self, fetch) -> list[str]:
+        """The docmap columns a fetch list (ES `_source`) reads, each
+        once. `_source` is a FILTER over the stored doc: unknown fields
+        are silently absent from the hit (reference filter_source,
+        `rest_handler.rs:674-742`), never an error. The doc key is in
+        every hit already (`doc_key`; `es_search_response` also shows
+        it under the index's doc-key field name), so it is not read
+        again. The docmap's positional and partition columns are not
+        document fields: naming one is a ValueError."""
+        key = self.config.doc_key
+        internal = [
+            c for c in fetch or []
+            if c in ("segment_id", "doc_id", "batch_id") and c != key
+        ]
+        if internal:
+            raise ValueError(
+                f"_source names internal index column(s) {internal}"
+            )
         doc_cols = set(self.docs().columns)
-        # doc_key is always selected positionally — fetching it again
-        # would duplicate the column (same guard as sort_by_field)
-        fetch_cols = list(
+        return list(
             dict.fromkeys(
                 c
-                for c in (fetch or [])
-                if c != "doc_key" and self._fcol(c) in doc_cols
+                for c in fetch or []
+                if c not in ("doc_key", key) and self._fcol(c) in doc_cols
             )
         )
+
+    def _hit_cols(self, fetch, snippet_fields) -> tuple[list[str], list[str]]:
+        """(fetch columns, fetch + snippet source columns) of a score
+        search. Snippet fields DO validate — the reference 400s "the
+        snippet field `x` must be stored" (`root.rs:313-335`)."""
+        doc_cols = set(self.docs().columns)
+        fetch_cols = self._fetch_cols(fetch)
         bad = [c for c in snippet_fields if self._fcol(c) not in doc_cols]
         if bad:
             raise ValueError(
@@ -2799,8 +2785,14 @@ class IndexSearcher:
                     max_score = score
                 if src_cols:
                     # unknown _source fields are ABSENT from the hit
-                    # (filter semantics), not null-valued keys
-                    src = {c: d[c] for c in src_cols if c in d}
+                    # (filter semantics), not null-valued keys; the
+                    # doc-key field reads the hit's doc key
+                    key = self.config.doc_key
+                    src = {
+                        c: d["doc_key" if c == key else c]
+                        for c in src_cols
+                        if c in d or c == key
+                    }
                 elif self.config.stored_source:
                     # the full document, re-rendered through each mapped
                     # field's output_format like the reference

@@ -5,7 +5,8 @@ its files with pyarrow; `builder._LOCAL_MAX_DOCS = 0` pins the Spark
 write. For every case both transports must give the same manifest
 records and checkpoints (timings and the transport masked), the same
 inv and docs partition directories with the same rows and schemas as
-read by Spark and by pyarrow, the same hits from both search
+read by Spark and by pyarrow, recorded docs read schemas equal to
+Spark's inference over the files, the same hits from both search
 transports, and the same `run_merges` output. A small build runs two
 Spark jobs (the size probe, then the collect) and no Python stage; a
 large one ships only row sizes to the driver; a crash between the
@@ -288,10 +289,15 @@ def _files(spark, d: str) -> dict:
     return out
 
 
+def _recorded(d: str, uid: int = 0) -> dict:
+    return {f.name: f.dataType for f in builder.load_docs_schema(d, uid).fields}
+
+
 def _datasets(spark, d: str) -> dict:
     """Rows of the whole inv dataset (its fixed columns and partition
-    columns) and of each docs dataset, read by Spark the way the
-    searcher reads them."""
+    columns) and of each docs dataset, read by Spark's schema inference
+    over every file. Each docs generation's recorded read schema names
+    the columns and types that inference gives."""
     out = {}
     if glob.glob(f"{d}/inv/*/*/*.parquet"):
         inv = spark.read.parquet(f"{d}/inv")
@@ -300,6 +306,12 @@ def _datasets(spark, d: str) -> dict:
         if not glob.glob(f"{top}/*/*.parquet"):
             continue
         docs = spark.read.option("mergeSchema", "true").parquet(top)
+        uid = int(top.rsplit("docs_uid", 1)[1]) if "docs_uid" in top else 0
+        inferred = {
+            f.name: f.dataType for f in docs.schema.fields
+            if f.name == "segment_id" or f.name not in _INV_COLUMNS
+        }
+        assert _recorded(d, uid) == inferred, top
         out[os.path.basename(top)] = (
             docs.schema.simpleString(),
             _sorted_rows(docs.select(sorted(docs.columns)).collect()),
@@ -352,6 +364,15 @@ def test_build_transport_parity(spark, tmp_path, monkeypatch, case):
         d_spark, qw_spark = build(spark, str(tmp_path / "spark"))
     assert _transports(d_local) == {"driver"}
     assert _transports(d_spark) == {"spark"}
+    if case == "empty":
+        # no docs file to infer from: the record holds the input's types
+        assert _recorded(d_local) == _recorded(d_spark) == {
+            "segment_id": T.StringType(), "doc_id": T.IntegerType(),
+            "doc_key": T.LongType(), "url": T.StringType(),
+            **{f.name: f.dataType for f in SCHEMA.fields
+               if f.name in ("lang", "big", "flag", "blob", "seen", "ts")},
+            "batch_id": T.StringType(),
+        }
     for stage in ("built", "merged"):
         # the Spark search transport's agreement is checked once
         both = stage == "built"
