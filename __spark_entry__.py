@@ -3921,26 +3921,20 @@ def _q_agg_terms_query(spark, sf_dir):
 
 def _q_agg_terms_query_cogroup(spark, sf_dir):
     """Same agg, FORCED onto the per-segment Arrow-cogroup partial-agg
-    tier (QWS_AGG_COGROUP_MIN_DOCS=0 during plan build): the numpy
+    tier (`aggs._COGROUP_MIN_DOCS` = 0 during plan build): the numpy
     bitmap-membership + value_counts kernel must value-hash exactly
     like the JVM join plan. Gives the cogroup code path its own
     driver-checked oracle row."""
-    import os as _os
+    from quickwit_spark.search import aggs
 
-    from quickwit_spark.search.aggs import terms_agg_for_query
-
-    prior = _os.environ.get("QWS_AGG_COGROUP_MIN_DOCS")
-    _os.environ["QWS_AGG_COGROUP_MIN_DOCS"] = "0"
+    prior = aggs._COGROUP_MIN_DOCS
+    aggs._COGROUP_MIN_DOCS = 0
     try:
-        return terms_agg_for_query(
+        return aggs.terms_agg_for_query(
             _searcher(spark, sf_dir), Term("text", "spark"), "lang", size=10
         )
     finally:
-        # restore a caller's own setting rather than dropping it
-        if prior is None:
-            _os.environ.pop("QWS_AGG_COGROUP_MIN_DOCS", None)
-        else:
-            _os.environ["QWS_AGG_COGROUP_MIN_DOCS"] = prior
+        aggs._COGROUP_MIN_DOCS = prior
 
 
 _AGG_TERMS_QUERY_SQL = """

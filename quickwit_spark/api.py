@@ -1012,9 +1012,7 @@ class QuickwitSpark:
     # json.loads loop and validate/parse JVM-side instead (the driver
     # then only ships raw strings); below it the driver loop is cheaper
     # than a Spark job and gives richer per-doc error messages
-    _DISTRIBUTED_INGEST_MIN = int(
-        os.environ.get("QWS_INGEST_DISTRIBUTED_MIN", "8192")
-    )
+    _DISTRIBUTED_INGEST_MIN = 8192
 
     @_locked
     def ingest(self, index_id: str, docs: list, _state_mutator=None) -> dict:
@@ -1023,7 +1021,7 @@ class QuickwitSpark:
         ingest semantics), never aborting the batch: the result carries
         `rejected` + `errors` when any doc failed to parse.
 
-        Large batches (≥ QWS_INGEST_DISTRIBUTED_MIN, default 8192) go
+        Large batches (≥ `_DISTRIBUTED_INGEST_MIN` docs) go
         through the distributed path: validation
         (json_object_keys-based), JSON parsing, and doc wrapping all
         run JVM-side — the driver never json.loads a document (the

@@ -235,7 +235,7 @@ def read_commits(index_dir: str) -> list[dict]:
 # `metastore/file_backed/mod.rs` put; here the rewrite is amortized so
 # manifest reads stay O(segments + recent commits) instead of O(all
 # commits ever) on long-lived indexes)
-COMPACT_EVERY = int(os.environ.get("QWS_MANIFEST_COMPACT_EVERY", "128"))
+COMPACT_EVERY = 128
 
 
 def compact_manifest(index_dir: str) -> str | None:

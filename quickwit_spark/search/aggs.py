@@ -25,6 +25,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# `terms_agg_for_query`'s per-segment Arrow-cogroup tier runs on
+# searches over [MIN, MAX) docs, measured on the bench corpus: below
+# ~1M docs the plain join is faster (one fewer Python-worker stage:
+# 0.7 vs 1.1 s at 200k); above ~8M the join wins again because the
+# cogroup converts the whole docmap through Arrow into Python — an
+# O(corpus) Python-side cost — while the join's SMJ + partial agg stays
+# inside whole-stage codegen (measured at 20M docs: join 3.9 s vs
+# cogroup 6.9 s; at 2M: join 2.1 s vs cogroup 1.3 s).
+_COGROUP_MIN_DOCS = 1_000_000
+_COGROUP_MAX_DOCS = 8_000_000
+
 
 def matches(searcher, query, time_range=None, columns: list[str] | None = None) -> DataFrame:
     """Matching docs joined to their docmap (fast-field) columns."""
@@ -69,25 +80,15 @@ def terms_agg_for_query(
             docs = docs.filter(fast_filter)
         return terms_agg(docs.select(F.col(col).alias(field)), field, size)
 
-    # the cogroup kernel wins in a middle size WINDOW, measured on the
-    # bench corpus: below ~1M docs the plain join is faster (one fewer
-    # Python-worker stage: 0.7 vs 1.1 s at 200k); above ~8M the join
-    # wins again because the cogroup converts the whole docmap through
-    # Arrow into Python — an O(corpus) Python-side cost — while the
-    # join's SMJ + partial agg stays inside whole-stage codegen
-    # (measured at 20M docs: join 3.9 s vs cogroup 6.9 s; at 2M:
-    # join 2.1 s vs cogroup 1.3 s). Outside the window, stay JVM.
-    import os as _os
-
-    min_docs = int(_os.environ.get("QWS_AGG_COGROUP_MIN_DOCS", "1000000"))
-    max_docs = int(_os.environ.get("QWS_AGG_COGROUP_MAX_DOCS", "8000000"))
+    # the cogroup tier's doc-count window (`_COGROUP_MIN_DOCS`,
+    # `_COGROUP_MAX_DOCS`); outside it, stay JVM
     searched = set(seg_ids) if seg_ids is not None else None
     n_docs = sum(
         s.num_docs
         for s in searcher.segments
         if searched is None or s.segment_id in searched
     )
-    if not (min_docs <= n_docs < max_docs):
+    if not (_COGROUP_MIN_DOCS <= n_docs < _COGROUP_MAX_DOCS):
         m = searcher.match_docs(
             query, time_range=time_range, _resolved=(ast, fast_filter, seg_ids)
         ).select("segment_id", "doc_id")

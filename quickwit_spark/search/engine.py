@@ -32,12 +32,9 @@ Two scoring modes:
 
 from __future__ import annotations
 
-import functools
 import heapq
 import json
-import os
 import re as _re
-import threading
 from typing import NamedTuple
 
 import numpy as np
@@ -398,39 +395,11 @@ def _count_up_to_batches(seg_ids: list[str], n: int, count_of) -> tuple[int, boo
     return total, True
 
 
-def _concurrent_span(fn):
-    """Count queries in flight on this searcher (re-entrant per
-    thread): a searcher-fleet workload firing N queries at once should
-    split the worker wave N ways instead of having every query claim
-    it whole — the kernel width computation in `_matches` divides by
-    this count. Solo queries see 1 and keep the full wave."""
-
-    @functools.wraps(fn)
-    def wrapper(self, *args, **kwargs):
-        tl = self._aq_tl
-        first = getattr(tl, "depth", 0) == 0
-        tl.depth = getattr(tl, "depth", 0) + 1
-        if first:
-            with self._aq_lock:
-                self._active_queries += 1
-        try:
-            return fn(self, *args, **kwargs)
-        finally:
-            tl.depth -= 1
-            if first:
-                with self._aq_lock:
-                    self._active_queries -= 1
-
-    return wrapper
-
-
 class IndexSearcher:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self._aq_lock = threading.Lock()
-        self._aq_tl = threading.local()
-        self._active_queries = 0
+        self._hot = None
         # per-generation config snapshots (builder.config_path): a
         # non-additive mapping update starts a new generation; queries
         # always validate against the NEWEST mapping
@@ -539,6 +508,19 @@ class IndexSearcher:
         # single-generation indexes keep the classic hit schema
         _uids = {s.doc_mapping_uid for s in self.segments}
         self._multi_gen = bool(_uids - {0}) or self.current_uid != 0
+        # dot-path field → physical docmap column (dynamic doc mapping)
+        self._colmap = {
+            p: (o or {}).get("column", p)
+            for p, o in (self.config.field_options or {}).items()
+        }
+        # the hot-postings cache and the driver-side term-stats cache
+        # (the reference's hotcache analog: term-dictionary doc_freqs
+        # are fetched once per TERM, not once per query) invalidate
+        # with the segment set
+        self.uncache()
+        self._dfreq: dict[tuple, int] = {}
+        self._dfreq_fetched: set[str] = set()
+        self._live_docs = None  # docs(), planned on first use
         if not self.segments:
             # zero-segment index (published empty, or fully expired):
             # serve empty frames with the canonical schemas instead of
@@ -547,8 +529,6 @@ class IndexSearcher:
 
             self._inv = self.spark.createDataFrame([], INV_SCHEMA)
             key_t = "string" if self.config.doc_key.endswith("url") else "bigint"
-            from pyspark.sql import types as T
-
             doc_fields = [
                 T.StructField("segment_id", T.StringType()),
                 T.StructField("doc_id", T.IntegerType()),
@@ -573,18 +553,6 @@ class IndexSearcher:
                 [], T.StructType(doc_fields)
             )
             self._doc_types = dict(self._docs.dtypes)
-            self._colmap = {
-                p: (o or {}).get("column", p)
-                for p, o in (self.config.field_options or {}).items()
-            }
-            if getattr(self, "_hot", None) is not None:
-                self._hot[1].unpersist()
-            self._hot = None
-            if getattr(self, "_early_m1", None) is not None:
-                self._early_m1.unpersist()
-                self._early_m1 = None
-            self._dfreq = {}
-            self._dfreq_fetched = set()
             self._arrow = _ArrowSnapshot(frozenset(), None, None, {})
             return
         # re-list the parquet datasets once per refresh, not per query,
@@ -614,24 +582,6 @@ class IndexSearcher:
         # normalization over dynamic dot-path fast columns
         self._doc_types = dict(self._docs.dtypes)
         self._arrow = self._arrow_snapshot(uids)
-        # dot-path field → physical docmap column (dynamic doc mapping)
-        self._colmap = {
-            p: (o or {}).get("column", p)
-            for p, o in (self.config.field_options or {}).items()
-        }
-        # hot-postings cache invalidates with the segment set
-        if getattr(self, "_hot", None) is not None:
-            self._hot[1].unpersist()
-        self._hot = None
-        # ...as does search_early's persisted phase-1 frame
-        if getattr(self, "_early_m1", None) is not None:
-            self._early_m1.unpersist()
-            self._early_m1 = None
-        # driver-side term-stats cache (the reference's hotcache analog:
-        # term-dictionary doc_freqs are fetched once per TERM, not once
-        # per query) — invalidates with the segment set
-        self._dfreq: dict[tuple, int] = {}
-        self._dfreq_fetched: set[str] = set()
 
     def _arrow_snapshot(self, uids: list[int]) -> _ArrowSnapshot:
         """pyarrow datasets over inv/ and, for a single doc-mapping
@@ -679,7 +629,15 @@ class IndexSearcher:
         return self._inv
 
     def docs(self) -> DataFrame:
-        return self._docs
+        """The docmap rows of the live segments. docs/ keeps a merged-
+        away segment's batch dirs until retention GC removes them, so
+        the frame filters on the live segment ids; it is planned once
+        per refresh, on first use, so opening an index does not pay for
+        the per-segment literals. The engine's own scans select their
+        segment ids themselves and read `_docs`."""
+        if self._live_docs is None:
+            self._live_docs = self._seg_pred_filter(self._docs, self.live_ids)
+        return self._live_docs
 
     def _tokenizer_for_field(self):
         fields = {f.name: f.tokenizer for f in self.config.fields}
@@ -714,25 +672,19 @@ class IndexSearcher:
             cond = cond | ((F.col("kind") == KIND_POS) & F.col("term").isin(tvals))
         df = base.filter(cond).persist()
         n = df.count()  # materialize now, not on first query
-        if getattr(self, "_hot", None) is not None:
-            self._hot[1].unpersist()
+        self.uncache()
         self._hot = (set(tvals), df, include_positions, frozenset(self.live_ids))
         return n
 
     def uncache(self):
-        if getattr(self, "_hot", None) is not None:
+        if self._hot is not None:
             self._hot[1].unpersist()
             self._hot = None
-        # search_early's persisted phase-1 frame pins blocks from the
-        # CURRENT segment set — release it alongside the hot cache
-        if getattr(self, "_early_m1", None) is not None:
-            self._early_m1.unpersist()
-            self._early_m1 = None
 
     def _hot_base(self, tvals, seg_ids, needs_positions: bool):
         """The cached inverted-index frame when it covers this query
         (terms ⊆ cached set, segments ⊆ cached segments), else None."""
-        hot = getattr(self, "_hot", None)
+        hot = self._hot
         if hot is None:
             return None
         hterms, hdf, hpos, hsegs = hot
@@ -1281,7 +1233,7 @@ class IndexSearcher:
         """(segment_id, doc_id) of the docs passing the fast filter: a
         pushed-filter docmap scan."""
         return (
-            self._seg_pred_filter(self.docs(), seg_ids)
+            self._seg_pred_filter(self._docs, seg_ids)
             .filter(fast_filter)
             .select("segment_id", "doc_id")
         )
@@ -1399,7 +1351,7 @@ class IndexSearcher:
         tvals = sorted({t for _, t in terms})
         if not tvals and fast_filter is None and isinstance(ast, MatchAll):
             # match-all without filters: answer straight from the docmap
-            docs = self._seg_pred_filter(self.docs(), seg_ids)
+            docs = self._seg_pred_filter(self._docs, seg_ids)
             if k is None:
                 return docs.select(
                     "segment_id", "doc_id", F.lit(0.0).alias("score")
@@ -1509,17 +1461,7 @@ class IndexSearcher:
         )
         task_cpus = int(self.spark.conf.get("spark.task.cpus", "1") or 1)
         wave = max(1, sc.defaultParallelism // task_cpus)
-        # concurrency-aware width: when several queries run at once on
-        # one session (the searcher-fleet pattern — bench drives 9
-        # concurrently), giving EACH query a full worker wave makes
-        # them contend for slots instead of pipelining; divide the wave
-        # by the number of queries currently being planned/executed on
-        # this searcher. QWS_KERNEL_WAVE_FRACTION (0 < f ≤ 1) scales
-        # the solo width for deployments that know their concurrency.
-        frac = float(os.environ.get("QWS_KERNEL_WAVE_FRACTION", "1") or 1)
-        wave = max(1, int(wave * min(max(frac, 0.01), 1.0)))
-        active = max(1, int(getattr(self, "_active_queries", 0)))
-        kparts = max(1, min(n_groups or 1, max(1, wave // active)))
+        kparts = max(1, min(n_groups or 1, wave))
         if fast_filter is not None:
             allowed_df = self._allowed_ids_frame(fast_filter, seg_ids)
             fn = make_eval(True)
@@ -1649,7 +1591,6 @@ class IndexSearcher:
         self._reject_residual_ranges(ast)
         return ast, fast_filter, seg_ids
 
-    @_concurrent_span
     def match_docs(
         self, query, time_range=None, mode: str = "parity", _resolved=None
     ) -> DataFrame:
@@ -1659,7 +1600,6 @@ class IndexSearcher:
         )
         return self._matches(ast, seg_ids, None, mode, fast_filter)
 
-    @_concurrent_span
     def count(self, query, time_range=None, segments=None, _resolved=None) -> int:
         """Hit count. Fast paths (reference `leaf.rs:466-468` metadata
         counts): match-all answers from the manifest; a bare Term
@@ -1693,7 +1633,6 @@ class IndexSearcher:
             return sum(self._driver_leaf(ast, seg_ids, 0, fast_filter)[1].values())
         return self._matches(ast, seg_ids, None, "parity", fast_filter).count()
 
-    @_concurrent_span
     def count_up_to(
         self, query, n: int, time_range=None, _resolved=None
     ) -> tuple[int, bool]:
@@ -1718,7 +1657,6 @@ class IndexSearcher:
             ),
         )
 
-    @_concurrent_span
     def sort_by_field(
         self,
         query,
@@ -1774,7 +1712,7 @@ class IndexSearcher:
             _resolved if _resolved is not None else self._resolve(query, time_range)
         )
         m = self._matches(ast, seg_ids, None, "parity", fast_filter, use_wand=False)
-        docs = self.docs().select(
+        docs = self._docs.select(
             "segment_id", "doc_id", "doc_key",
             *[qcol(self._fcol(f)).alias(a) for (f, _), a in zip(specs, out_aliases)],
             *[qcol(self._fcol(c)).alias(c) for c in fetch_cols],
@@ -1860,7 +1798,7 @@ class IndexSearcher:
             raise ValueError(
                 f"_source names internal index column(s) {internal}"
             )
-        doc_cols = set(self.docs().columns)
+        doc_cols = set(self._doc_types)
         return list(
             dict.fromkeys(
                 c
@@ -1873,7 +1811,7 @@ class IndexSearcher:
         """(fetch columns, fetch + snippet source columns) of a score
         search. Snippet fields DO validate — the reference 400s "the
         snippet field `x` must be stored" (`root.rs:313-335`)."""
-        doc_cols = set(self.docs().columns)
+        doc_cols = set(self._doc_types)
         fetch_cols = self._fetch_cols(fetch)
         bad = [c for c in snippet_fields if self._fcol(c) not in doc_cols]
         if bad:
@@ -1888,7 +1826,7 @@ class IndexSearcher:
         (segment_id, doc_id, doc_key, *cols), with the partial hits'
         segment ids and doc ids pushed into the parquet reader as In
         filters (row-group pruning; the docmap is never shuffled)."""
-        docs = self.docs().select(
+        docs = self._docs.select(
             "segment_id", "doc_id", "doc_key",
             *[qcol(self._fcol(c)).alias(c) for c in cols],
         )
@@ -1925,32 +1863,23 @@ class IndexSearcher:
             )
         return {(r["segment_id"], r["doc_id"]): r for r in frame.collect()}
 
-    def _topk(
+    def _leaf(
         self,
-        resolved: tuple,
+        ast: QueryAst,
+        fast_filter,
+        seg_ids: list[str],
         k: int,
         mode: str = "parity",
-        search_after: tuple | None = None,
-        cols=(),
         use_wand: bool = True,
-    ) -> tuple[list[dict], dict]:
-        """Top-k by BM25 as one leaf→root pass (reference leaf search,
-        root merge and fetch_docs; SURVEY §3.1 steps 5-7):
-
-          leaf   ONE collect of the kernel frame (or, for small
-                 searches, the same kernel run on the driver over a
-                 pyarrow read — `_leaf_transport`): per segment ≤ k
-                 partial hits (plus ties at the search_after score) and
-                 the exact num_hits, counted before the cursor and the
-                 top-k cut;
-          root   the driver merges the partial hits by (score desc,
-                 doc_key desc), applying the cursor;
-          fetch  one docmap scan for the candidates that can still win.
-
-        → (hits, counts): ≤ k hit dicts in rank order with doc_key,
-        score, rank, *cols (+ segment_id after a doc-mapping update),
-        and {segment_id: num_hits} over the searched segments."""
-        ast, fast_filter, seg_ids = resolved
+        search_after: tuple | None = None,
+    ) -> tuple[list[tuple], dict, bool]:
+        """The top-k leaf (reference leaf search, SURVEY §3.1 step 5):
+        ONE collect of the kernel frame or, for small searches, the same
+        kernel run on the driver over a pyarrow read (`_leaf_transport`).
+        Per segment ≤ k partial hits (plus ties at the search_after
+        score) and the exact num_hits, counted before the cursor and
+        the top-k cut. → (partial hits [(score, segment_id, doc_id)],
+        {segment_id: num_hits}, whether the leaf ran on the driver)."""
         driver = self._leaf_transport(ast, fast_filter, seg_ids, mode) == "driver"
         if driver:
             partial, counts = self._driver_leaf(
@@ -1976,6 +1905,23 @@ class IndexSearcher:
                 for s in self.segments
                 if s.segment_id in keep
             }
+        return partial, counts, driver
+
+    def _root(
+        self,
+        partial: list[tuple],
+        k: int,
+        search_after: tuple | None = None,
+        cols=(),
+        driver: bool = False,
+    ) -> list[dict]:
+        """The root over the leaves' partial hits (reference root merge
+        and fetch_docs, SURVEY §3.1 steps 6-7): the driver applies the
+        cursor, keeps the candidates that can still win, fetches their
+        docmap rows in one scan (with pyarrow when `driver`) and ranks
+        them by (score desc, doc_key desc). → ≤ k hit dicts in rank
+        order with doc_key, score, rank, *cols (+ segment_id after a
+        doc-mapping update)."""
         sa_score = sa_key = None
         if search_after is not None:
             # strictly after the cursor. The kernel's cutoff is
@@ -2018,9 +1964,61 @@ class IndexSearcher:
         hits = hits[: max(k, 0)]
         for rank, h in enumerate(hits, 1):
             h["rank"] = rank
-        return hits, counts
+        return hits
 
-    @_concurrent_span
+    def _topk(
+        self,
+        resolved: tuple,
+        k: int,
+        mode: str = "parity",
+        search_after: tuple | None = None,
+        cols=(),
+        use_wand: bool = True,
+    ) -> tuple[list[dict], dict]:
+        """Top-k by BM25 as one leaf→root pass (`_leaf`, then `_root`).
+        → (hits, {segment_id: num_hits} over the searched segments)."""
+        ast, fast_filter, seg_ids = resolved
+        partial, counts, driver = self._leaf(
+            ast, fast_filter, seg_ids, k, mode, use_wand, search_after
+        )
+        return self._root(partial, k, search_after, cols, driver), counts
+
+    def _add_snippets(self, ast, hits: list[dict], fields, max_chars: int = 150):
+        """`snippet_<field>` on each of the ≤ k driver rows `hits`,
+        which carry the raw field values: the best fragment of the field
+        highlighted on the query's terms for that field (reference
+        `fetch_docs.rs:108-167`, made in the fetch phase)."""
+        from quickwit_spark.search.snippets import snippet_for_text
+
+        tok = self._tokenizer_for_field()
+        per_field: dict[str, dict] = {}
+        for fld, t in collect_fulltext_terms(ast, tok):
+            per_field.setdefault(fld, {})[t] = 1.0
+        for f in fields:
+            scores = per_field.get(f, {})
+            for h in hits:
+                h[f"snippet_{f}"] = snippet_for_text(h.get(f), scores, max_chars)
+
+    def _hits_frame(self, hits: list[dict], cols, snippet_fields=()) -> DataFrame:
+        """The driver rows of a score search as a DataFrame: (doc_key,
+        score, rank, *cols, snippet_<field>…[, segment_id])."""
+        gen = ["segment_id"] if self._multi_gen else []
+        fields = {f.name: f for f in self._fetch_frame(cols).schema}
+        schema = T.StructType(
+            [
+                fields["doc_key"],
+                T.StructField("score", T.DoubleType()),
+                T.StructField("rank", T.IntegerType()),
+                *[fields[c] for c in cols],
+                *[T.StructField(f"snippet_{f}", T.StringType()) for f in snippet_fields],
+                *[fields[c] for c in gen],
+            ]
+        )
+        names = schema.fieldNames()
+        return self.spark.createDataFrame(
+            [tuple(h[c] for c in names) for h in hits], schema
+        )
+
     def search(
         self,
         query,
@@ -2037,8 +2035,8 @@ class IndexSearcher:
         """Top-k by BM25 desc → (doc_key, score, rank [, fetch cols]
         [, snippet_<field> cols]).
 
-        Runs the one-pass `_topk` core eagerly and wraps its ≤ k driver
-        rows in a DataFrame.
+        Runs the one-pass `_topk` core eagerly, makes the snippets on its
+        ≤ k driver rows and wraps them in a DataFrame.
 
         `search_after=(score, doc_key)` returns hits strictly after the
         cursor in rank order (reference pagination,
@@ -2054,8 +2052,6 @@ class IndexSearcher:
         callers reuse an already-resolved plan so pattern expansion
         doesn't run twice.
         """
-        from pyspark.sql import types as T
-
         resolved = (
             _resolved if _resolved is not None else self._resolve(query, time_range)
         )
@@ -2064,36 +2060,8 @@ class IndexSearcher:
         hits, _counts = self._topk(
             resolved, k, mode, search_after, raw_cols, use_wand
         )
-        gen = ["segment_id"] if self._multi_gen else []
-        fields = {f.name: f for f in self._fetch_frame(raw_cols).schema}
-        schema = T.StructType(
-            [
-                fields["doc_key"],
-                T.StructField("score", T.DoubleType()),
-                T.StructField("rank", T.IntegerType()),
-                *[fields[c] for c in raw_cols + gen],
-            ]
-        )
-        names = schema.fieldNames()
-        out = self.spark.createDataFrame(
-            [tuple(h[c] for c in names) for h in hits], schema
-        )
-        if snippet_fields:
-            from quickwit_spark.search.snippets import attach_snippets
-
-            tok = self._tokenizer_for_field()
-            per_field: dict[str, set[str]] = {}
-            for fld, t in collect_fulltext_terms(resolved[0], tok):
-                per_field.setdefault(fld, set()).add(t)
-            out = attach_snippets(
-                out, snippet_fields, per_field, snippet_max_chars
-            )
-            out = out.select(
-                "doc_key", "score", "rank", *[qcol(c) for c in fetch_cols],
-                *[qcol(f"snippet_{f}") for f in snippet_fields],
-                *gen,
-            )
-        return out
+        self._add_snippets(resolved[0], hits, snippet_fields, snippet_max_chars)
+        return self._hits_frame(hits, fetch_cols, snippet_fields)
 
     # ---------- split-order early termination (leaf.rs:958-1100) ----------
 
@@ -2222,15 +2190,6 @@ class IndexSearcher:
             bounds[sid] = b
         return bounds
 
-    @staticmethod
-    def _leaf_hits(leaf: DataFrame) -> DataFrame:
-        """The partial-hit rows of a top-k leaf frame, count rows
-        dropped → (segment_id, doc_id, score)."""
-        return leaf.filter(F.col("doc_id").isNotNull()).select(
-            "segment_id", "doc_id", "score"
-        )
-
-    @_concurrent_span
     def search_early(
         self,
         query,
@@ -2242,10 +2201,13 @@ class IndexSearcher:
     ) -> dict:
         """Top-k with split-order early termination (the reference's
         `CanSplitDoBetter`, `leaf.rs:958-1100,1385-1389`): segments are
-        sorted by their metadata score bound, a first phase searches the
-        high-bound prefix, and the kth score θ then PROVES the rest
-        losers (bound ≤ θ → demoted) or contenders (phase 2). Results
-        are identical to `search()` — demotion is evidence-based.
+        sorted by their metadata score bound, a first `_leaf` searches
+        the high-bound prefix, and the kth score θ among its partial
+        hits then PROVES the rest losers (bound ≤ θ → demoted) or
+        contenders (a second `_leaf`). One `_root` ranks both leaves'
+        partial hits, so results are identical to `search()` — θ is
+        exact, since the global top-k is a subset of the union of the
+        per-segment top-k lists, and demotion is evidence-based.
 
         count_hits (reference `CountHits`, `search.proto:245-248`):
           count_all      demoted segments still contribute an exact
@@ -2260,15 +2222,13 @@ class IndexSearcher:
            "bounds": {segment_id: float}}"""
         resolved = self._resolve(query, time_range)
         ast, fast_filter, seg_ids = resolved
+        fetch_cols = self._fetch_cols(fetch)
         triples = self._scoring_terms_with_boost(ast)
         if triples is None or len(seg_ids) <= 1:
-            hits = self.search(
-                query, k=k, mode=mode, time_range=time_range, fetch=fetch,
-                _resolved=resolved,
-            )
+            hits, counts = self._topk(resolved, k, mode, cols=fetch_cols)
             return {
-                "hits": hits,
-                "num_hits": self.count(query, time_range, _resolved=resolved),
+                "hits": self._hits_frame(hits, fetch_cols),
+                "num_hits": sum(counts.values()),
                 "phase1": seg_ids, "phase2": [], "demoted": [],
                 "bounds": {},
             }
@@ -2279,21 +2239,9 @@ class IndexSearcher:
         n1 = max(1, -(-len(ordered) // 4))
         phase1 = [s for s in ordered[:n1] if bounds[s] > 0.0] or ordered[:1]
         rest = [s for s in ordered if s not in set(phase1)]
-        # persist: the kernel runs once, serving both the θ probe and
-        # the final assembly (which must union the FULL phase-1 match
-        # set — truncating to the k collected rows here would let a
-        # θ-tied doc with the winning doc_key tie-break vanish).
-        # One cached phase-1 frame per searcher: the previous call's is
-        # released here so repeated early-terminated queries don't
-        # accumulate executor cache blocks.
-        prev = getattr(self, "_early_m1", None)
-        if prev is not None:
-            prev.unpersist()
-        self._early_m1 = m1 = self._leaf_hits(
-            self._matches(ast, phase1, k, mode, fast_filter)
-        ).persist()
-        w1 = m1.orderBy(F.col("score").desc()).limit(k).collect()
-        theta = min((r["score"] for r in w1), default=None) if len(w1) >= k else None
+        partial, counts, driver = self._leaf(ast, fast_filter, phase1, k, mode)
+        scores = [p[0] for p in partial]
+        theta = heapq.nlargest(k, scores)[-1] if 0 < k <= len(scores) else None
         if theta is None or theta <= 0.0:
             # k not filled (or filled with zero-score docs that any
             # segment could tie): every segment stays a contender
@@ -2307,39 +2255,23 @@ class IndexSearcher:
             cut = theta - (2e-9 if mode == "oracle" else 0.0)
             phase2 = [s for s in rest if bounds[s] > cut]
         demoted = [s for s in rest if s not in set(phase2)]
-        matches = m1
         if phase2:
-            matches = matches.unionByName(
-                self._leaf_hits(self._matches(ast, phase2, k, mode, fast_filter))
+            partial2, counts2, driver2 = self._leaf(
+                ast, fast_filter, phase2, k, mode
             )
-        if mode == "oracle":
-            matches = matches.withColumn("score", F.round(F.col("score"), 9))
-        fetch_cols = list(fetch or [])
-        docs = self.docs().select(
-            "segment_id", "doc_id", "doc_key",
-            *[qcol(self._fcol(c)).alias(c) for c in fetch_cols],
-        )
-        hits = docs.join(F.broadcast(matches), ["segment_id", "doc_id"], "inner")
-        order = [F.col("score").desc(), F.col("doc_key").desc()]
-        hits = hits.orderBy(*order).limit(k)
-        w = Window.orderBy(*order)
-        hits = hits.select(
-            "doc_key", "score", F.row_number().over(w).alias("rank"),
-            *[qcol(c) for c in fetch_cols],
-            *(["segment_id"] if self._multi_gen else []),
-        )
-        if count_hits == "underestimate":
-            # reference CountHits::Underestimate (search.proto:245-248):
-            # count only the splits actually searched; demoted segments
-            # contribute nothing, so the total may undercount.
-            num_hits = self.count(
-                query, time_range, segments=list(phase1) + list(phase2),
-                _resolved=resolved,
-            )
-        else:
-            num_hits = self.count(query, time_range, _resolved=resolved)
+            partial += partial2
+            counts.update(counts2)
+            driver = driver and driver2
+        hits = self._root(partial, k, cols=fetch_cols, driver=driver)
+        # the leaves counted every segment they searched; reference
+        # CountHits::Underestimate (search.proto:245-248) stops there,
+        # so demoted segments contribute nothing and the total may
+        # undercount
+        num_hits = sum(counts.values())
+        if count_hits != "underestimate" and demoted:
+            num_hits += self.count(None, segments=demoted, _resolved=resolved)
         return {
-            "hits": hits,
+            "hits": self._hits_frame(hits, fetch_cols),
             "num_hits": num_hits,
             "phase1": phase1,
             "phase2": phase2,
@@ -2380,7 +2312,7 @@ class IndexSearcher:
             for f in self.config.fields
         ]
         indexed = {f["name"] for f in out}
-        for sf in self.docs().schema.fields:
+        for sf in self._docs.schema.fields:
             if sf.name in ("segment_id", "doc_id", "batch_id") or sf.name in indexed:
                 continue
             out.append(
@@ -2619,7 +2551,7 @@ class IndexSearcher:
                 )
         agg_body = body.get("aggs") or body.get("aggregations")
         if agg_body:
-            m = self.docs().join(
+            m = self._docs.join(
                 self.match_docs(ast, _resolved=resolved).select(
                     "segment_id", "doc_id"
                 ),
@@ -3244,9 +3176,7 @@ class IndexSearcher:
         # tombstone — refresh() would re-read the now-deleted parquet
         self.segments = []
         self.live_ids = []
-        if getattr(self, "_hot", None) is not None:
-            self._hot[1].unpersist()
-        self._hot = None
+        self.uncache()
         return {"acknowledged": True}
 
     def scroll(
@@ -3288,7 +3218,7 @@ class IndexSearcher:
         """Export fast-field columns of ALL matching docs (reference
         search_stream, `search_stream/leaf.rs:51-290`)."""
         m = self.match_docs(query, time_range)
-        return m.join(self.docs(), ["segment_id", "doc_id"], "inner").select(
+        return m.join(self._docs, ["segment_id", "doc_id"], "inner").select(
             "doc_key", *columns
         )
 

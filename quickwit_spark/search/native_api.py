@@ -40,6 +40,8 @@ from __future__ import annotations
 import json
 import time
 
+from quickwit_spark.search.engine import _count_up_to_batches
+
 _KNOWN_PARAMS = {
     "query", "aggs", "search_field", "snippet_fields",
     "start_timestamp", "end_timestamp", "max_hits", "start_offset",
@@ -164,45 +166,51 @@ def native_search(searcher, params: dict) -> dict:
     max_hits = _uint_param(params, "max_hits", 20)
     start_offset = _uint_param(params, "start_offset", 0)
     count_all = str(params.get("count_all", "true")).lower() != "false"
+    resolved = searcher._resolve(query, time_range)
+    k = start_offset + max_hits
 
-    if count_all:
-        num_hits = searcher.count(query, time_range)
-    else:
-        num_hits, _exact = searcher.count_up_to(
-            query, start_offset + max_hits, time_range
-        )
-
+    # a score-sorted page takes its hits AND its count from one top-k
+    # pass (`_topk`'s per-segment num_hits); field-sorted and
+    # max_hits=0 requests count through `count`
     rows = []
+    counts = None
+    raw_only: set = set()
     if max_hits > 0:
         sort_by = params.get("sort_by") or params.get("sort_by_field")
-        k = start_offset + max_hits
         fetch = (
             [searcher.config.stored_source]
             if searcher.config.stored_source
             else None
         )
+        fetch_cols, raw_cols = searcher._hit_cols(fetch, snippet_fields)
+        raw_only = set(raw_cols) - set(fetch_cols)
         if sort_by and "_score" not in str(sort_by):
-            specs = _sort_specs(sort_by)
-            df = searcher.sort_by_field(
-                query, specs, k=k, time_range=time_range, fetch=fetch,
-                tie_by_key=True,
-            )
-            if snippet_fields:
-                df = _attach_native_snippets(
-                    searcher, df, query, time_range, snippet_fields
-                )
+            rows = [
+                r.asDict()
+                for r in searcher.sort_by_field(
+                    query, _sort_specs(sort_by), k=k, fetch=raw_cols,
+                    tie_by_key=True, _resolved=resolved,
+                ).collect()
+            ]
         else:
-            df = searcher.search(
-                query, k=k, time_range=time_range, fetch=fetch,
-                snippet_fields=snippet_fields or None,
-            )
-        rows = df.collect()[start_offset:]
-    snip_cols = {f"snippet_{f}" for f in snippet_fields}
-    hits = [
-        _doc_payload(
-            {k: v for k, v in r.asDict().items() if k not in snip_cols},
-            searcher,
+            rows, counts = searcher._topk(resolved, k, cols=raw_cols)
+        rows = rows[start_offset:]
+        searcher._add_snippets(resolved[0], rows, snippet_fields)
+    if counts is not None:
+        count_of = lambda segs: sum(counts.get(s, 0) for s in segs)  # noqa: E731
+    else:
+        count_of = lambda segs: searcher.count(  # noqa: E731
+            None, segments=segs, _resolved=resolved
         )
+    if count_all:
+        num_hits = count_of(resolved[2])
+    else:
+        num_hits, _exact = _count_up_to_batches(resolved[2], k, count_of)
+    # the payload leaves out the snippets and the snippet sources the
+    # request did not fetch
+    drop = raw_only | {f"snippet_{f}" for f in snippet_fields}
+    hits = [
+        _doc_payload({c: v for c, v in r.items() if c not in drop}, searcher)
         for r in rows
     ]
     out = {"num_hits": num_hits, "hits": hits, "errors": []}
@@ -219,9 +227,7 @@ def native_search(searcher, params: dict) -> dict:
         ]
     aggs_param = params.get("aggs")
     if aggs_param:
-        out["aggregations"] = _run_native_aggs(
-            searcher, query, time_range, aggs_param
-        )
+        out["aggregations"] = _run_native_aggs(searcher, resolved, aggs_param)
     out["elapsed_time_micros"] = int((time.perf_counter() - t_start) * 1e6)
     return out
 
@@ -288,47 +294,7 @@ def native_search_plan(searcher, params: dict) -> dict:
     }
 
 
-def _attach_native_snippets(searcher, df, query, time_range, snippet_fields):
-    """Snippets for field-sorted hits: the score path highlights inside
-    `searcher.search`; the sort path fetches raw field values here and
-    runs the same ≤k-row highlighter over them."""
-    from quickwit_spark.query.ast import collect_fulltext_terms
-    from quickwit_spark.search.snippets import attach_snippets
-
-    ast, _ff, _segs = searcher._resolve(query, time_range)
-    tok = searcher._tokenizer_for_field()
-    per_field: dict[str, set[str]] = {}
-    for fld, t in collect_fulltext_terms(ast, tok):
-        per_field.setdefault(fld, set()).add(t)
-    missing = [c for c in snippet_fields if c not in df.columns]
-    if missing:
-        from quickwit_spark.search.engine import qcol
-
-        # same contract as the score path: snippet fields must be
-        # stored (reference `root.rs:313-335`
-        # validate_requested_snippet_fields 400s, never an
-        # AnalysisException), and dynamic paths resolve through the
-        # physical column map
-        doc_cols = set(searcher.docs().columns)
-        bad = [c for c in missing if searcher._fcol(c) not in doc_cols]
-        if bad:
-            raise ValueError(
-                f"snippet field(s) not stored in the docmap: {bad}"
-            )
-        winners = df.select("doc_key")
-        src = searcher.docs().select(
-            "doc_key",
-            *[qcol(searcher._fcol(c)).alias(c) for c in missing],
-        )
-        from pyspark.sql import functions as F
-
-        df = df.join(F.broadcast(winners).join(src, "doc_key"), "doc_key")
-    df = attach_snippets(df, snippet_fields, per_field)
-    # joins drop the sorted order — restore the rank the sort produced
-    return df.orderBy("rank")
-
-
-def _run_native_aggs(searcher, query, time_range, aggs_param) -> dict:
+def _run_native_aggs(searcher, resolved, aggs_param) -> dict:
     """The `aggs` query parameter (tantivy aggregation JSON): run over
     the full match set and shape like the reference response."""
     from quickwit_spark.search.es_aggs import run_es_aggs, shape_es_agg
@@ -338,7 +304,6 @@ def _run_native_aggs(searcher, query, time_range, aggs_param) -> dict:
     )
     if not isinstance(agg_body, dict):
         raise ValueError("aggs must be a JSON object")
-    resolved = searcher._resolve(query, time_range)
     ast = resolved[0]
     m = searcher.docs().join(
         searcher.match_docs(ast, _resolved=resolved).select(

@@ -2,12 +2,13 @@
 
 Re-expresses the reference's snippet step — `fetch_docs.rs:41-167`
 builds a per-field tantivy `SnippetGenerator` over the k fetched hits
-and returns a highlighted best fragment per hit — as a vectorized
-pandas pass over the (≤ k) winner rows of the fetch join. Semantics
-follow tantivy's documented generator: pick the window of consecutive
-tokens spanning at most `max_chars` characters whose matched-term
-occurrences score highest (ties → earliest window), then wrap every
-matched token in that window in ``<b>…</b>``.
+and returns a highlighted best fragment per hit — as a plain Python
+pass over the (≤ k) winner rows the top-k root fetched to the driver
+(`IndexSearcher._add_snippets`). Semantics follow tantivy's documented
+generator: pick the window of consecutive tokens spanning at most
+`max_chars` characters whose matched-term occurrences score highest
+(ties → earliest window), then wrap every matched token in that window
+in ``<b>…</b>``.
 
 This runs on the TINY side of the plan (the k winners after the global
 top-k), mirroring where the reference spends this work; the corpus scan
@@ -17,10 +18,6 @@ never sees it.
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _TOKEN_RE = re.compile(r"[0-9A-Za-z]+")
 
@@ -63,25 +60,3 @@ def snippet_for_text(
             cur = e
     out.append(text[cur:we])
     return "".join(out)
-
-
-def attach_snippets(
-    df: DataFrame,
-    fields: list[str],
-    terms_per_field: dict[str, set[str]],
-    max_chars: int = 150,
-) -> DataFrame:
-    """Add a `snippet_<field>` column per requested field. `df` must
-    carry the raw stored column for each field; intended for the ≤ k
-    winner rows after the global top-k."""
-    def make_udf(scores: dict[str, float]):
-        @F.pandas_udf("string")
-        def snip(col: pd.Series) -> pd.Series:
-            return col.map(lambda s: snippet_for_text(s, scores, max_chars))
-
-        return snip
-
-    for field in fields:
-        snip = make_udf({t: 1.0 for t in terms_per_field.get(field, ())})
-        df = df.withColumn(f"snippet_{field}", snip(F.col(field)))
-    return df

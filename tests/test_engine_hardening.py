@@ -114,14 +114,6 @@ def test_nanosecond_es_format_parses(spark, idx):
     assert out.microsecond == 123456
 
 
-def test_refresh_releases_early_phase1_cache(spark, idx):
-    s = IndexSearcher(spark, idx)
-    s.search_early("alpha", k=3)
-    assert getattr(s, "_early_m1", None) is not None
-    s.uncache()
-    assert getattr(s, "_early_m1", None) is None
-
-
 def test_unknown_source_fields_filter_silently(spark, idx):
     """ES `_source` is a FILTER over the stored doc (reference
     filter_source, rest_handler.rs:674-742): unknown fields are absent

@@ -428,7 +428,7 @@ def test_resume_with_different_num_batches_rejected(
     assert sum(s.num_docs for s in mf.live_segments(d)) == 500
 
 
-def test_terms_agg_for_query_tiers_match_join_path(spark, searcher):
+def test_terms_agg_for_query_tiers_match_join_path(spark, searcher, monkeypatch):
     """`terms_agg_for_query`'s three physical tiers (straight groupBy,
     filter-pushdown groupBy, per-segment Arrow-cogroup partial agg)
     all return exactly what the generic matches→join→terms_agg
@@ -451,8 +451,6 @@ def test_terms_agg_for_query_tiers_match_join_path(spark, searcher):
         ),
         Term("text", "zzznothing"),  # empty match set
     ]
-    import os
-
     for q in cases:
         ref = A.terms_agg(
             A.matches(searcher, q, columns=["lang"]), "lang", size=10
@@ -460,14 +458,9 @@ def test_terms_agg_for_query_tiers_match_join_path(spark, searcher):
         # both sides of the size gate: the small-corpus join tier and
         # the big-corpus Arrow-cogroup tier must agree with the
         # generic composition
-        for min_docs in ("1000000", "0"):
-            os.environ["QWS_AGG_COGROUP_MIN_DOCS"] = min_docs
-            try:
-                fast = A.terms_agg_for_query(
-                    searcher, q, "lang", size=10
-                ).collect()
-            finally:
-                os.environ.pop("QWS_AGG_COGROUP_MIN_DOCS", None)
+        for min_docs in (1_000_000, 0):
+            monkeypatch.setattr(A, "_COGROUP_MIN_DOCS", min_docs)
+            fast = A.terms_agg_for_query(searcher, q, "lang", size=10).collect()
             assert [(r["key"], r["doc_count"]) for r in fast] == [
                 (r["key"], r["doc_count"]) for r in ref
             ], f"mismatch for {q!r} at min_docs={min_docs}"

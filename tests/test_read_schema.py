@@ -126,6 +126,20 @@ def test_open_after_merge_runs_no_spark_job(spark, tmp_path):
     assert s.docs().columns == ["segment_id", "doc_id", "doc_key", "url", "lang", "batch_id"]
 
 
+def test_docs_after_merge_holds_live_segments_only(spark, tmp_path):
+    """Until retention GC removes a merged-away segment's batch dirs,
+    `docs()` still reads only the live (merged) segment's rows."""
+    d = str(tmp_path / "idx")
+    _two_batches(spark, d)
+    assert run_merges(spark, d, PAIR)
+    s = IndexSearcher(spark, d)
+    assert len(s.live_ids) == 1
+    assert s.docs().count() == 10
+    # a column-pruned projection, as the Jaeger spans frame makes
+    rows = s.docs().select("doc_key", "url").collect()
+    assert sorted(r["doc_key"] for r in rows) == list(range(10))
+
+
 def test_record_is_additive_and_rewritten_only_on_change(spark, tmp_path):
     d = str(tmp_path / "idx")
     build_index(spark, _frame(spark, 0, 5, {"url": "string"}), d,
