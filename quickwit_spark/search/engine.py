@@ -2360,46 +2360,48 @@ class IndexSearcher:
         tag_filter = extract_tag_filter(
             pre_expand, lambda field, text: tok(field)(text)
         )
-        import contextlib
-        import io
-
         # the plans a top-k runs, built but not executed: the leaf, then
         # the winner fetch (whose doc_id In list is bound to the leaf's
         # partial hits at run time). The driver transport's reads are
-        # described by their pushed pyarrow filters instead.
+        # described by their pushed pyarrow filters instead. The text is
+        # built per call, never printed: a capture of the process-wide
+        # stdout would mix concurrent callers' plans.
         transport = self._leaf_transport(ast, fast_filter, seg_ids, "parity")
         snap = self._arrow
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            if transport == "driver":
-                print(
-                    "== leaf (driver): pyarrow read of inv/, "
-                    f"{len(snap.inv.files)} files, into the kernel per segment =="
-                )
-                print(f"filter: {self._driver_leaf_filter(ast, seg_ids)}")
-                if fast_filter is not None:
-                    print("== allowed doc ids: docmap scan collected as Arrow ==")
-                    self._allowed_ids_frame(fast_filter, seg_ids).explain(
-                        "formatted"
-                    )
-            else:
-                print("== leaf kernel: partial hits + num_hits per segment ==")
-                self._matches(ast, seg_ids, k, "parity", fast_filter).explain(
-                    "formatted"
-                )
-            if transport == "driver" and snap.docs is not None:
-                print(
-                    "== winner fetch (driver): pyarrow read of docs/, "
-                    f"{len(snap.docs.files)} files, of the merged partial hits =="
-                )
-                print(
-                    "filter: "
-                    f"{pds.field('segment_id').isin(sorted(seg_ids))}"
-                    " and doc_id in <partial hit ids>"
-                )
-            else:
-                print("== winner fetch: docmap scan of the merged partial hits ==")
-                self._fetch_frame([], seg_ids).explain("formatted")
+
+        def formatted(df) -> str:  # what `df.explain("formatted")` prints
+            return self.spark.sparkContext._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+
+        lines = []
+        if transport == "driver":
+            lines.append(
+                "== leaf (driver): pyarrow read of inv/, "
+                f"{len(snap.inv.files)} files, into the kernel per segment =="
+            )
+            lines.append(f"filter: {self._driver_leaf_filter(ast, seg_ids)}")
+            if fast_filter is not None:
+                lines.append("== allowed doc ids: docmap scan collected as Arrow ==")
+                lines.append(formatted(self._allowed_ids_frame(fast_filter, seg_ids)))
+        else:
+            lines.append("== leaf kernel: partial hits + num_hits per segment ==")
+            lines.append(
+                formatted(self._matches(ast, seg_ids, k, "parity", fast_filter))
+            )
+        if transport == "driver" and snap.docs is not None:
+            lines.append(
+                "== winner fetch (driver): pyarrow read of docs/, "
+                f"{len(snap.docs.files)} files, of the merged partial hits =="
+            )
+            lines.append(
+                "filter: "
+                f"{pds.field('segment_id').isin(sorted(seg_ids))}"
+                " and doc_id in <partial hit ids>"
+            )
+        else:
+            lines.append("== winner fetch: docmap scan of the merged partial hits ==")
+            lines.append(formatted(self._fetch_frame([], seg_ids)))
         early = {}
         if early_terminate:
             et = self.search_early(
@@ -2425,7 +2427,7 @@ class IndexSearcher:
             ),
             "warmup_terms": sorted({t for _, t in terms}),
             "transport": transport,
-            "spark_plan": buf.getvalue(),
+            "spark_plan": "".join(f"{ln}\n" for ln in lines),
         }
 
     def es_search(self, body: dict, mode: str = "parity") -> dict:

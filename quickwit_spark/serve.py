@@ -35,12 +35,16 @@ itself stays on Spark.
 from __future__ import annotations
 
 import json
+import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from quickwit_spark.search.es_wire import EsApiError, EsWireHandler
 
 _ELASTIC_PREFIX = "/api/v1/_elastic"
+_DIGITS = re.compile(r"[0-9]+")
+_HEX = re.compile(rb"[0-9A-Fa-f]+")
+_MAX_LINE = 65536  # chunk size and trailer lines (http.server's header line cap)
 
 
 class EsHttpServer:
@@ -66,14 +70,19 @@ class EsHttpServer:
 
         class _Request(BaseHTTPRequestHandler):
             protocol_version = "HTTP/1.1"
+            # TCP_NODELAY: with Nagle on, a response's second segment
+            # waits for the client's delayed ACK (~40 ms) from the
+            # second request of a keep-alive connection on
+            disable_nagle_algorithm = True
 
             def log_message(self, *args):  # quiet: no stderr per request
                 pass
 
             def _dispatch(self, method: str) -> None:
+                framed = False  # body read to its end: keep-alive is safe
                 try:
-                    length = int(self.headers.get("Content-Length") or 0)
-                    raw = self.rfile.read(length) if length else b""
+                    raw = self._read_body()
+                    framed = True
                     result = server.handle(
                         method,
                         self.path,
@@ -90,11 +99,61 @@ class EsHttpServer:
                         {"status": 500, "error": {"reason": str(e)}}
                     ).encode("utf-8")
                     status = 500
-                self.send_response(status)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(payload)))
-                self.end_headers()
-                self.wfile.write(payload)
+                self._reply(status, payload, close=not framed)
+
+            def _read_body(self) -> bytes:
+                """The request body, framed by `Transfer-Encoding:
+                chunked` or `Content-Length` (RFC 9112 §6.3); a
+                malformed frame is a 400."""
+                coding = self.headers.get("Transfer-Encoding")
+                if coding is not None:
+                    if coding.strip().lower() != "chunked":
+                        raise EsApiError(
+                            400, f"unsupported Transfer-Encoding: {coding}"
+                        )
+                    return self._read_chunked()
+                length = (self.headers.get("Content-Length") or "0").strip()
+                if not _DIGITS.fullmatch(length):
+                    raise EsApiError(400, f"invalid Content-Length: {length}")
+                return self.rfile.read(int(length))
+
+            def _read_chunked(self) -> bytes:
+                parts = []
+                while True:
+                    line = self.rfile.readline(_MAX_LINE + 1)
+                    size = line.split(b";", 1)[0].strip()
+                    if len(line) > _MAX_LINE or not _HEX.fullmatch(size):
+                        raise EsApiError(400, "invalid chunk size line")
+                    n = int(size, 16)
+                    if n == 0:
+                        break
+                    parts.append(self.rfile.read(n))
+                    if len(parts[-1]) != n or self.rfile.read(2) != b"\r\n":
+                        raise EsApiError(400, "truncated chunk")
+                while line not in (b"\r\n", b"\n", b""):  # trailer section
+                    line = self.rfile.readline(_MAX_LINE + 1)
+                    if len(line) > _MAX_LINE:
+                        raise EsApiError(400, "invalid chunked trailer")
+                return b"".join(parts)
+
+            def _reply(self, status: int, payload: bytes, close: bool) -> None:
+                """Status line, headers and body as ONE write, so the
+                whole response leaves in one send (see
+                `disable_nagle_algorithm`)."""
+                head = [
+                    f"{self.protocol_version} {status} "
+                    f"{self.responses.get(status, ('',))[0]}",
+                    f"Server: {self.version_string()}",
+                    f"Date: {self.date_time_string()}",
+                    "Content-Type: application/json",
+                    f"Content-Length: {len(payload)}",
+                ]
+                if close:
+                    head.append("Connection: close")
+                    self.close_connection = True
+                self.wfile.write(
+                    ("\r\n".join(head) + "\r\n\r\n").encode("latin-1") + payload
+                )
 
             def do_GET(self):
                 self._dispatch("GET")

@@ -1,7 +1,12 @@
 """HTTP serving shim: real clients over a real socket against the ES
 wire layer (reference rest_handler.rs route surface)."""
 
+import http.client
 import json
+import socket
+import statistics
+import threading
+import time
 import urllib.error
 import urllib.request
 
@@ -532,3 +537,108 @@ def test_native_search_aggs_and_snippets_over_http(server):
     status, _ = _call(
         server, "GET", "/api/v1/logs/search?aggs=notjson")
     assert status == 400
+
+
+def test_keep_alive_responses_do_not_stall(server):
+    """From the second request of a keep-alive connection on, a response
+    sent as headers then body with Nagle on waits ~40 ms for the
+    client's delayed ACK; one write with TCP_NODELAY answers at once.
+    Error statuses keep the connection open too."""
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
+    try:
+        secs = []
+        for _ in range(20):
+            t0 = time.perf_counter()
+            conn.request("GET", "/")
+            resp = conn.getresponse()
+            assert resp.status == 200 and "cluster_name" in json.loads(resp.read())
+            secs.append(time.perf_counter() - t0)
+        assert statistics.median(secs) < 0.020, secs
+        sock = conn.sock
+
+        def call(method, path, body=None):
+            conn.request(method, path, body=body,
+                         headers={"Content-Type": "application/json"})
+            resp = conn.getresponse()
+            out = resp.status, json.loads(resp.read())
+            assert conn.sock is sock  # answered on the same connection
+            return out
+
+        status, resp = call("GET", "/nope/_search")
+        assert status == 404 and "error" in resp
+        status, resp = call("POST", "/logs/_search", b"{not json")
+        assert status == 400 and "error" in resp
+        status, resp = call(
+            "POST", "/logs/_search",
+            json.dumps({"query": {"match": {"msg": "error"}}, "size": 1}),
+        )
+        assert status == 200 and len(resp["hits"]["hits"]) == 1
+    finally:
+        conn.close()
+
+
+def _raw_request(sock, head: bytes, body: bytes = b""):
+    sock.sendall(head + b"\r\n" + body)
+    resp = http.client.HTTPResponse(sock)
+    resp.begin()
+    return resp.status, json.loads(resp.read())
+
+
+def test_chunked_and_malformed_request_bodies(server):
+    """A chunked body is decoded (not read as empty, leaving its bytes
+    to be parsed as the next request line); a malformed Content-Length
+    answers 400 and closes the connection."""
+    body = json.dumps({"query": {"match": {"msg": "error"}}, "size": 0})
+    status, expect = _call(server, "POST", "/logs/_search", json.loads(body))
+    assert status == 200 and expect["hits"]["total"]["value"] > 0
+    raw = body.encode()
+    chunked = b"".join(
+        b"%x;ext=1\r\n%s\r\n" % (len(c), c) for c in (raw[:7], raw[7:])
+    ) + b"0\r\nX-Trailer: t\r\n\r\n"
+    with socket.create_connection(("127.0.0.1", server.port), timeout=120) as s:
+        status, resp = _raw_request(
+            s,
+            b"POST /logs/_search HTTP/1.1\r\nHost: t\r\n"
+            b"Content-Type: application/json\r\n"
+            b"Transfer-Encoding: chunked\r\n",
+            chunked,
+        )
+        assert status == 200
+        assert resp["hits"]["total"] == expect["hits"]["total"]
+        # the connection is still in step: the next request parses
+        status, resp = _raw_request(s, b"GET / HTTP/1.1\r\nHost: t\r\n")
+        assert status == 200 and "cluster_name" in resp
+    with socket.create_connection(("127.0.0.1", server.port), timeout=120) as s:
+        status, resp = _raw_request(
+            s,
+            b"POST /logs/_search HTTP/1.1\r\nHost: t\r\n"
+            b"Content-Length: abc\r\n",
+        )
+        assert status == 400 and "Content-Length" in resp["error"]["reason"]
+        assert s.recv(1) == b""  # closed: the body's extent is unknown
+
+
+def test_concurrent_search_plans_stay_apart(server):
+    """`search_plan` builds its text per call: eight threads explaining
+    at once each get their own plan, never another's or an empty one."""
+    searcher = server.facade.searcher("logs")
+    terms = [str(10 + i) for i in range(8)]
+    barrier = threading.Barrier(len(terms))
+    plans: dict = {}
+
+    def explain(term):
+        barrier.wait()
+        plans[term] = searcher.search_plan(f"msg:{term} AND n:[0 TO 59]")[
+            "spark_plan"
+        ]
+
+    threads = [threading.Thread(target=explain, args=(t,)) for t in terms]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert sorted(plans) == terms
+    for term, plan in plans.items():
+        assert "== Physical Plan ==" in plan, plan
+        named = {t for t in terms if f'"{t}"' in plan}
+        assert named == {term}, (term, plan)
