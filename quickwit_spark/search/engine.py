@@ -32,6 +32,7 @@ Two scoring modes:
 
 from __future__ import annotations
 
+import datetime as _dt
 import heapq
 import json
 import re as _re
@@ -44,6 +45,7 @@ import pyarrow.dataset as pds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from quickwit_spark.analysis import get_tokenizer
 from quickwit_spark.analysis.tokenizer import resolve_tokenizer
@@ -140,6 +142,42 @@ def _arrow_pylist(arr, dtype: str) -> list:
             for v in arr.cast(pa.int64()).to_pylist()
         ]
     return arr.to_pylist()
+
+
+def _arrow_value(v, dt: T.DataType):
+    """A collected value of Spark type `dt` as `pa.Table.from_pylist`
+    must get it to give the same value back: naive (local) timestamps
+    as UTC instants, rows as dicts, maps as key/value pairs."""
+    if v is None:
+        return None
+    if isinstance(dt, T.TimestampType):
+        return v.astimezone(_dt.timezone.utc)
+    if isinstance(dt, T.ArrayType):
+        return [_arrow_value(x, dt.elementType) for x in v]
+    if isinstance(dt, T.MapType):
+        return [
+            (_arrow_value(a, dt.keyType), _arrow_value(b, dt.valueType))
+            for a, b in v.items()
+        ]
+    if isinstance(dt, T.StructType):
+        d = v.asDict() if hasattr(v, "asDict") else v
+        return {f.name: _arrow_value(d.get(f.name), f.dataType) for f in dt.fields}
+    return v
+
+
+def rows_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """Driver rows (dicts) as a DataFrame of `schema`, built from an
+    Arrow table: a LocalRelation, so collecting it runs no Spark job (a
+    frame built from a Python list is an RDD scan, one job per
+    collect)."""
+    table = pa.Table.from_pylist(
+        [
+            {f.name: _arrow_value(r.get(f.name), f.dataType) for f in schema.fields}
+            for r in rows
+        ],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _segment_leaf(segment_id: str, rows: list[dict], allowed, ast, tok, **kw):
@@ -1999,12 +2037,12 @@ class IndexSearcher:
             for h in hits:
                 h[f"snippet_{f}"] = snippet_for_text(h.get(f), scores, max_chars)
 
-    def _hits_frame(self, hits: list[dict], cols, snippet_fields=()) -> DataFrame:
-        """The driver rows of a score search as a DataFrame: (doc_key,
-        score, rank, *cols, snippet_<field>…[, segment_id])."""
+    def _hits_schema(self, cols, snippet_fields=()) -> T.StructType:
+        """The schema of a score search's hits: (doc_key, score, rank,
+        *cols, snippet_<field>…[, segment_id])."""
         gen = ["segment_id"] if self._multi_gen else []
         fields = {f.name: f for f in self._fetch_frame(cols).schema}
-        schema = T.StructType(
+        return T.StructType(
             [
                 fields["doc_key"],
                 T.StructField("score", T.DoubleType()),
@@ -2014,10 +2052,11 @@ class IndexSearcher:
                 *[fields[c] for c in gen],
             ]
         )
-        names = schema.fieldNames()
-        return self.spark.createDataFrame(
-            [tuple(h[c] for c in names) for h in hits], schema
-        )
+
+    def _hits_frame(self, hits: list[dict], cols, snippet_fields=()) -> DataFrame:
+        """The driver rows of a score search as a DataFrame of
+        `_hits_schema`."""
+        return rows_frame(self.spark, hits, self._hits_schema(cols, snippet_fields))
 
     def search(
         self,
@@ -2438,14 +2477,19 @@ class IndexSearcher:
         return self._es_search(body, mode)[0]
 
     def _es_search(
-        self, body: dict, mode: str = "parity", driver_rows: bool = False
+        self,
+        body: dict,
+        mode: str = "parity",
+        driver_rows: bool = False,
+        fetch: list[str] | None = None,
     ) -> tuple[dict, tuple, dict | None]:
         """`es_search` → (out, resolved, counts). With `driver_rows`, a
         BM25-sorted body's hits stay the `_topk` core's driver rows (a
         list of dicts) and `counts` is that pass's {segment_id:
-        num_hits}; otherwise counts is None."""
+        num_hits}; otherwise counts is None. `fetch` names the docmap
+        columns the hits carry (default: the body's `_source`, else the
+        stored source)."""
         from quickwit_spark.query.es_dsl import from_es_body
-        from quickwit_spark.search import aggs as _aggs
         from quickwit_spark.search.es_aggs import run_es_aggs
 
         ast = from_es_body(
@@ -2469,10 +2513,13 @@ class IndexSearcher:
         k_total = start_offset + size
         resolved = self._resolve(ast, None)  # shared: one pattern expansion
         sort_spec = body.get("sort")
-        fetch = list(body.get("_source") or [])
-        if not fetch and self.config.stored_source:
-            # no explicit projection: ES returns the full original doc
-            fetch = [self.config.stored_source]
+        if fetch is not None:
+            fetch = list(fetch)
+        else:
+            fetch = list(body.get("_source") or [])
+            if not fetch and self.config.stored_source:
+                # no explicit projection: ES returns the full original doc
+                fetch = [self.config.stored_source]
         if size > 0 and sort_spec and not self._is_score_sort(sort_spec):
             specs = self._parse_es_sort(sort_spec)
             # mixed-typed sort keys: fetch the original-token column so
@@ -2553,16 +2600,22 @@ class IndexSearcher:
                 )
         agg_body = body.get("aggs") or body.get("aggregations")
         if agg_body:
-            m = self._docs.join(
-                self.match_docs(ast, _resolved=resolved).select(
-                    "segment_id", "doc_id"
-                ),
-                ["segment_id", "doc_id"],
-                "inner",
-            )
-            m, agg_body = self._agg_frame_and_body(m, agg_body)
-            out["aggregations"] = run_es_aggs(m, agg_body)
+            out["aggregations"] = run_es_aggs(*self._agg_input(agg_body, resolved))
         return out, resolved, counts
+
+    def _agg_input(self, agg_body: dict, resolved: tuple):
+        """The aggregation input of a resolved query → (frame, lowered
+        body): the docmap rows of its matches (`_docs`; the match frame
+        already keeps to the live searched segments) with `agg_body`
+        lowered onto them by `_agg_frame_and_body`."""
+        m = self._docs.join(
+            self.match_docs(None, _resolved=resolved).select(
+                "segment_id", "doc_id"
+            ),
+            ["segment_id", "doc_id"],
+            "inner",
+        )
+        return self._agg_frame_and_body(m, agg_body)
 
     def _agg_frame_and_body(self, m: DataFrame, agg_body: dict):
         """Resolve dot-path agg fields against the dynamic doc mapping:

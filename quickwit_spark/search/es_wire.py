@@ -51,15 +51,6 @@ class EsApiError(Exception):
 MAX_SCROLL_TTL_SECS = 1800  # reference scroll_context.rs TTL cap
 
 
-def _key_order(v) -> tuple:
-    """Tie-break key for a doc id: numeric ids compare numerically (the
-    engine's tie_by_key order), non-numeric lexicographically after."""
-    s = str(v)
-    if s.lstrip("-").isdigit():
-        return (0, int(s), "")
-    return (1, 0, s)
-
-
 def _parse_ttl_secs(s: str) -> int:
     m = re.fullmatch(r"(\d+)(ms|s|m|h|d)?", str(s).strip())
     if not m:
@@ -83,15 +74,6 @@ def _zero_shards() -> dict:
         "total": 0, "successful": 0, "skipped": 0, "failed": 0,
         "failures": [],
     }
-
-
-def _sum_shards(stats: list[dict]) -> dict:
-    """Accumulate per-index `_shards` stats into one envelope."""
-    out = _zero_shards()
-    for st in stats:
-        for k in ("total", "successful", "skipped", "failed"):
-            out[k] += (st or {}).get(k, 0)
-    return out
 
 
 def _source_filter(doc, includes: list[str], excludes: list[str]):
@@ -536,8 +518,14 @@ class EsWireHandler:
             },
         }
 
+    def _federation(self, names: list[str]):
+        """The named indexes as one `MultiIndexSearcher`."""
+        from quickwit_spark.search.multi import MultiIndexSearcher
+
+        members = [(n, self.indexes[n]) for n in names]
+        return MultiIndexSearcher(members[0][1].spark, members)
+
     def _search_many(self, names: list[str], params: dict, body: dict) -> dict:
-        import functools
         import time as _time
 
         if params.get("scroll"):
@@ -552,209 +540,13 @@ class EsWireHandler:
             return self._empty_search_response(t0)
         body = self._effective_body(params, body)
         inc, exc = self._src_filters(params)
-        size = int(body.get("size", 10))
-        all_hits: list[dict] = []
-        total = 0
-        relation = "eq"
-        max_score = None
-        # concurrent leaf fan-out (the reference root issues per-index
-        # leaf searches in parallel); Spark job submission is
-        # thread-safe and the searchers are stateless. Aggregations are
-        # stripped from the member bodies — _aggs_shaped_many runs them
-        # ONCE over the union, so per-member agg work would be discarded
-        from concurrent.futures import ThreadPoolExecutor
-
-        # `from` must apply AFTER the global merge (the reference root
-        # applies start_offset when merging leaf responses) — each
-        # member returns its own top from+size instead
-        start_offset = int(body.get("from", 0) or 0)
-        member_body = {
-            k: v
-            for k, v in body.items()
-            if k not in ("aggs", "aggregations", "from")
-        }
-        if start_offset:
-            member_body["size"] = start_offset + size
         try:
-            with ThreadPoolExecutor(max_workers=min(8, len(names))) as ex:
-                responses = list(
-                    ex.map(
-                        lambda n: self.indexes[n].es_search_response(member_body),
-                        names,
-                    )
-                )
+            resp = self._federation(names).es_search_response(body)
         except EsApiError:
             raise
         except (ValueError, TypeError, KeyError, NotImplementedError) as e:
             raise EsApiError(400, str(e)) from e
-        for n, resp in zip(names, responses):
-            for h in resp["hits"]["hits"]:
-                h["_index"] = n
-                all_hits.append(h)
-            t = resp["hits"]["total"]
-            total += t["value"]
-            if t["relation"] != "eq":
-                relation = t["relation"]
-            ms = resp["hits"].get("max_score")
-            if ms is not None and (max_score is None or ms > max_score):
-                max_score = ms
-        sort_spec = body.get("sort")
-        if sort_spec and all_hits and "sort" in all_hits[0]:
-            from quickwit_spark.search.engine import IndexSearcher
-
-            descs = [d for _, d in IndexSearcher._parse_es_sort(sort_spec)]
-
-            def cmp(a: dict, b: dict) -> int:
-                for va, vb, desc in zip(a["sort"], b["sort"], descs):
-                    if (va is None) != (vb is None):
-                        return -1 if vb is None else 1  # missing-last
-                    if va is None or va == vb:
-                        continue
-                    try:
-                        lt = va < vb
-                    except TypeError:
-                        lt = (type(va).__name__, str(va)) < (
-                            type(vb).__name__,
-                            str(vb),
-                        )
-                    return (1 if lt else -1) if desc else (-1 if lt else 1)
-                if a["_index"] != b["_index"]:
-                    return -1 if a["_index"] < b["_index"] else 1
-                ka, kb = _key_order(a["_id"]), _key_order(b["_id"])
-                return -1 if ka < kb else (1 if ka > kb else 0)
-
-            all_hits.sort(key=functools.cmp_to_key(cmp))
-        else:
-            all_hits.sort(
-                key=lambda h: (
-                    -(h["_score"] if h["_score"] is not None else float("-inf")),
-                    h["_index"],
-                    _key_order(h["_id"]),
-                )
-            )
-        shards = _sum_shards([resp.get("_shards") for resp in responses])
-        out = {
-            "took": int((_time.perf_counter() - t0) * 1000),
-            "timed_out": False,
-            "_shards": shards,
-            "hits": {
-                "total": {"value": total, "relation": relation},
-                "max_score": max_score,
-                "hits": all_hits[start_offset : start_offset + size],
-            },
-        }
-        try:
-            aggs_shaped = self._aggs_shaped_many(names, body)
-        except EsApiError:
-            raise
-        except (ValueError, TypeError, KeyError, NotImplementedError) as e:
-            # the agg fan-out runs after the hits try-block; its parse
-            # errors must still become 400 envelopes, never raw 500s
-            raise EsApiError(400, str(e)) from e
-        if aggs_shaped is not None:
-            out["aggregations"] = aggs_shaped
-        return self._apply_src_filters(out, inc, exc)
-
-    def _aggs_shaped_many(self, names: list[str], body: dict) -> dict | None:
-        """One distributed agg plan over the UNION of per-index match
-        frames (each resolved against its own field config) — the Spark
-        shape of the reference root's merge of per-index agg partials."""
-        agg_body = body.get("aggs") or body.get("aggregations")
-        if not agg_body or not names:
-            return None
-        from pyspark.sql import functions as F
-
-        from quickwit_spark.search import aggs as _aggs
-        from quickwit_spark.search.es_aggs import (
-            _validate_aggs,
-            run_es_aggs,
-            shape_es_agg,
-        )
-
-        # shape-validate before field_walk's .items() traversal below
-        _validate_aggs(None, agg_body)
-
-        def field_walk(node: dict, fn) -> dict:
-            """Rewrite every {"field": ...} leaf in deterministic
-            traversal order; fn(old_field) -> new_field."""
-            out = {}
-            for name, spec in node.items():
-                out[name] = {}
-                for k, v in spec.items():
-                    if k in ("aggs", "aggregations"):
-                        out[name][k] = field_walk(v, fn)
-                    elif isinstance(v, dict) and "field" in v:
-                        out[name][k] = {**v, "field": fn(v["field"])}
-                    else:
-                        out[name][k] = v
-            return out
-
-        # canonical federated body: the i-th field reference (traversal
-        # order) becomes __qw_fed_i — members may resolve the same field
-        # to DIFFERENT physical columns (declared vs dynamic vs absent),
-        # so alignment is by reference position, never by column name
-        order: list[str] = []
-        fed_body = field_walk(
-            agg_body, lambda f: (order.append(f), f"__qw_fed_{len(order)-1}")[1]
-        )
-        members = []  # (frame, member column per position, dtype-or-None)
-        for n in names:
-            s = self.indexes[n]
-            m = _aggs.matches(s, s._es_ast(body))
-            # per-index field→column resolution (dot paths, normalizers,
-            # absent fields → null literal)
-            m2, b2 = s._agg_frame_and_body(m, agg_body)
-            member_cols: list = []
-            field_walk(b2, lambda f: (member_cols.append(f), f)[1])
-            opts = s.config.field_options or {}
-            dtypes = dict(m2.dtypes)
-            dts = []
-            for i, c in enumerate(member_cols):
-                f = order[i]
-                if f in opts or s._fcol(f) in m.columns:
-                    dts.append(dtypes[c])
-                else:
-                    dts.append(None)  # absent here: null literal, no vote
-            members.append((m2, member_cols, dts))
-
-        def _numeric(dt: str) -> bool:
-            return dt in (
-                "bigint", "int", "smallint", "tinyint", "double", "float"
-            ) or dt.startswith("decimal")
-
-        # per-position union type from the members that HAVE the field:
-        # equal types keep, all-numeric widens to double, else string —
-        # never let ANSI casts fire on real values during the union
-        targets = []
-        for i in range(len(order)):
-            votes = {dts[i] for _, _, dts in members if dts[i] is not None}
-            if not votes:
-                targets.append("double")
-            elif len(votes) == 1:
-                targets.append(votes.pop())
-            elif all(_numeric(v) for v in votes):
-                targets.append("double")
-            else:
-                targets.append("string")
-        frames = [
-            m2.select(
-                "segment_id",
-                "doc_id",
-                "doc_key",
-                *[
-                    F.col(c).cast(targets[i]).alias(f"__qw_fed_{i}")
-                    for i, c in enumerate(member_cols)
-                ],
-            )
-            for m2, member_cols, _ in members
-        ]
-        u = frames[0]
-        for f in frames[1:]:
-            u = u.unionByName(f, allowMissingColumns=True)
-        raw = run_es_aggs(u, fed_body)
-        return {
-            name: shape_es_agg(fed_body[name], df) for name, df in raw.items()
-        }
+        return self._apply_src_filters(resp, inc, exc)
 
     def _count_many(self, names: list[str], params: dict, body: dict) -> dict:
         from concurrent.futures import ThreadPoolExecutor
@@ -801,127 +593,101 @@ class EsWireHandler:
 
     # ------------------------------------------------------------- scroll
 
-    def _scroll_start(self, searcher, params: dict, body: dict) -> dict:
-        from quickwit_spark.search.es_aggs import shape_es_agg
-        from quickwit_spark.search.scroll import ScrollContext, create_scroll
+    def _scroll_members(self, members: list[tuple], params: dict, body: dict):
+        """What a single-index and a federated scroll start share: the
+        validated effective body and one ScrollContext, with its own
+        cursor, per [(name, searcher)] member. → (body, [(name,
+        ScrollContext)], total hits, sort value format, the contexts'
+        paging options)."""
+        from quickwit_spark.search.scroll import ScrollContext
 
         self._scroll_validate(params)
         body = self._effective_body(params, body)
-        size = int(body.get("size", 10))
         sort_spec = body.get("sort")
         sort_field, desc, fmt = None, True, None
-        if sort_spec and not searcher._is_score_sort(sort_spec):
-            specs = searcher._parse_es_sort_full(sort_spec)
+        if members and sort_spec and not members[0][1]._is_score_sort(sort_spec):
+            specs = members[0][1]._parse_es_sort_full(sort_spec)
             if len(specs) != 1:
                 raise EsApiError(400, "scroll supports a single sort key")
             sort_field, desc, fmt = specs[0]
-        fetch = list(body.get("_source") or [])
-        if not fetch and searcher.config.stored_source:
-            fetch = [searcher.config.stored_source]
-        ctx = ScrollContext(
-            searcher,
-            searcher._es_ast(body),
-            page_size=size,
-            fetch=fetch,
-            sort_field=sort_field,
-            descending=desc,
-        )
-        create_scroll(ctx)
-        total = searcher.count(searcher._es_ast(body))
-        aggs_shaped = None
-        agg_body = body.get("aggs") or body.get("aggregations")
-        if agg_body:
-            raw = searcher.es_search({**body, "size": 0})
-            aggs_shaped = {
-                name: shape_es_agg(agg_body[name], df)
-                for name, df in (raw.get("aggregations") or {}).items()
-            }
-        inc, exc = self._src_filters(params)
-        state = {
-            "ctx": ctx,
-            "searcher": searcher,
-            "total": total,
-            "aggs": aggs_shaped,
-            "inc": inc,
-            "exc": exc,
-            "fmt": fmt,
-            "explicit_src": list(body.get("_source") or []),
-            "shards": searcher._shards_stats(),
+        opts = {
+            "page_size": int(body.get("size", 10)),
+            "sort_field": sort_field,
+            "descending": desc,
         }
+        ctxs, total = [], 0
+        for n, s in members:
+            fetch = list(body.get("_source") or [])
+            if not fetch and s.config.stored_source:
+                fetch = [s.config.stored_source]
+            ast = s._es_ast(body)
+            ctxs.append((n, ScrollContext(s, ast, fetch=fetch, **opts)))
+            total += s.count(ast)
+        return body, ctxs, total, fmt, opts
+
+    def _scroll_open(self, state: dict, params: dict, body: dict) -> dict:
+        """Register a started scroll (`state` holds its context) and
+        answer its first page."""
+        from quickwit_spark.search.scroll import create_scroll
+
+        ctx = state["ctx"]
+        create_scroll(ctx)
+        inc, exc = self._src_filters(params)
+        state.update(inc=inc, exc=exc, explicit_src=list(body.get("_source") or []))
         self._purge_scrolls()
         self._touch_scroll_state(state, _parse_ttl_secs(params["scroll"]))
         self._scrolls[ctx.scroll_id] = state
         return self._scroll_response(state)
+
+    def _scroll_start(self, searcher, params: dict, body: dict) -> dict:
+        from quickwit_spark.search.es_aggs import shape_es_agg
+
+        body, ctxs, total, fmt, _ = self._scroll_members(
+            [(None, searcher)], params, body
+        )
+        aggs = None
+        agg_body = body.get("aggs") or body.get("aggregations")
+        if agg_body:
+            raw = searcher.es_search({**body, "size": 0})
+            aggs = {
+                name: shape_es_agg(agg_body[name], df)
+                for name, df in (raw.get("aggregations") or {}).items()
+            }
+        state = {
+            "ctx": ctxs[0][1],
+            "searcher": searcher,
+            "total": total,
+            "aggs": aggs,
+            "fmt": fmt,
+            "shards": searcher._shards_stats(),
+        }
+        return self._scroll_open(state, params, body)
 
     def _scroll_start_many(
         self, names: list[str], params: dict, body: dict
     ) -> dict:
         """Federated scroll start: one per-member ScrollContext each
         with its own cursor, merged by `FederatedScrollContext`."""
-        from quickwit_spark.search.scroll import (
-            FederatedScrollContext,
-            ScrollContext,
-            create_scroll,
-        )
+        from quickwit_spark.search.multi import _sum_shards
+        from quickwit_spark.search.scroll import FederatedScrollContext
 
-        self._scroll_validate(params)
-        body = self._effective_body(params, body)
-        size = int(body.get("size", 10))
-        sort_spec = body.get("sort")
-        sort_field, desc, fmt = None, True, None
-        members: list[tuple] = []
-        total = 0
-        if names:
-            first = self.indexes[names[0]]
-            if sort_spec and not first._is_score_sort(sort_spec):
-                specs = first._parse_es_sort_full(sort_spec)
-                if len(specs) != 1:
-                    raise EsApiError(400, "scroll supports a single sort key")
-                sort_field, desc, fmt = specs[0]
-            for n in names:
-                s = self.indexes[n]
-                fetch = list(body.get("_source") or [])
-                if not fetch and s.config.stored_source:
-                    fetch = [s.config.stored_source]
-                ast = s._es_ast(body)
-                members.append(
-                    (
-                        n,
-                        ScrollContext(
-                            s,
-                            ast,
-                            page_size=size,
-                            fetch=fetch,
-                            sort_field=sort_field,
-                            descending=desc,
-                        ),
-                    )
-                )
-                total += s.count(ast)
-        ctx = FederatedScrollContext(
-            members, page_size=size, sort_field=sort_field, descending=desc
-        )
-        create_scroll(ctx)
-        inc, exc = self._src_filters(params)
-        shards = _sum_shards(
-            [self.indexes[n]._shards_stats() for n in names]
-        )
+        members = [(n, self.indexes[n]) for n in names]
+        body, ctxs, total, fmt, opts = self._scroll_members(members, params, body)
+        has_aggs = bool(body.get("aggs") or body.get("aggregations"))
         state = {
-            "ctx": ctx,
+            "ctx": FederatedScrollContext(ctxs, **opts),
             "searcher": None,
-            "members": {n: self.indexes[n] for n in names},
+            "members": dict(members),
             "total": total,
-            "aggs": self._aggs_shaped_many(names, body),
-            "inc": inc,
-            "exc": exc,
+            "aggs": (
+                self._federation(names)._shaped_aggs(body)
+                if has_aggs and names
+                else None
+            ),
             "fmt": fmt,
-            "explicit_src": list(body.get("_source") or []),
-            "shards": shards,
+            "shards": _sum_shards([s._shards_stats() for _, s in members]),
         }
-        self._purge_scrolls()
-        self._touch_scroll_state(state, _parse_ttl_secs(params["scroll"]))
-        self._scrolls[ctx.scroll_id] = state
-        return self._scroll_response(state)
+        return self._scroll_open(state, params, body)
 
     @staticmethod
     def _scroll_validate(params: dict) -> None:

@@ -304,16 +304,7 @@ def _run_native_aggs(searcher, resolved, aggs_param) -> dict:
     )
     if not isinstance(agg_body, dict):
         raise ValueError("aggs must be a JSON object")
-    ast = resolved[0]
-    m = searcher.docs().join(
-        searcher.match_docs(ast, _resolved=resolved).select(
-            "segment_id", "doc_id"
-        ),
-        ["segment_id", "doc_id"],
-        "inner",
-    )
-    m, lowered = searcher._agg_frame_and_body(m, agg_body)
-    raw = run_es_aggs(m, lowered)
+    raw = run_es_aggs(*searcher._agg_input(agg_body, resolved))
     # shape with the ORIGINAL spec (dot-path field names), like the ES
     # envelope does — the lowered body renames dynamic-path columns
     return {

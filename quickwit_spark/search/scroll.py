@@ -21,16 +21,9 @@ from __future__ import annotations
 
 import uuid
 
+from quickwit_spark.search.multi import _cmp
+
 SCROLL_BATCH_LEN = 1_000
-
-
-def _key_order(v) -> tuple:
-    """Tie-break key for a doc id: numeric ids compare numerically (the
-    engine's tie_by_key order), non-numeric lexicographically after."""
-    s = str(v)
-    if s.lstrip("-").isdigit():
-        return (0, int(s), "")
-    return (1, 0, s)
 
 
 class ScrollContext:
@@ -233,8 +226,10 @@ def _dec_val(v):
 
 class FederatedScrollContext:
     """Scroll across several indexes: a k-way merge of per-member
-    `ScrollContext` streams (the reference root merges sorted leaf hit
-    streams the same way, `root.rs` merge of per-index leaf responses).
+    `ScrollContext` streams in the federation's hit order, the order of
+    the ES wire's multi-index `_search` (the reference root merges
+    sorted leaf hit streams the same way, `root.rs` merge of per-index
+    leaf responses).
     Each member keeps its own cursor/batching correctness; the
     federation only ORDERS the already-sorted streams, so cross-index
     doc-key collisions can't poison a member's `search_after` cursor.
@@ -278,23 +273,15 @@ class FederatedScrollContext:
         return row["score"] if self.sort_field is None else row["sort_value"]
 
     def _before(self, name_a, row_a, name_b, row_b) -> bool:
-        """Strict stream order: primary value (score always desc; field
-        sort honors `descending`, missing-last either way), then member
-        name, then doc_key — the engine's own tie_by_key order extended
-        with the index name."""
-        va, vb = self._primary(row_a), self._primary(row_b)
-        if (va is None) != (vb is None):
-            return vb is None  # missing-last in both directions
-        if va is not None and va != vb:
-            try:
-                lt = va < vb
-            except TypeError:  # cross-index type drift: compare portably
-                lt = (type(va).__name__, str(va)) < (type(vb).__name__, str(vb))
-            desc = True if self.sort_field is None else self.descending
-            return (not lt) if desc else lt
-        if name_a != name_b:
-            return name_a < name_b
-        return _key_order(row_a["doc_key"]) < _key_order(row_b["doc_key"])
+        """Stream order across members: the federation's hit order
+        (`multi._cmp`: primary value, score always desc, a field sort in
+        `descending`, missing last either way; then member name)."""
+        desc = True if self.sort_field is None else self.descending
+        return _cmp(
+            ((self._primary(row_a),), name_a),
+            ((self._primary(row_b),), name_b),
+            (desc,),
+        ) < 0
 
     def next_page(self) -> list:
         from pyspark.sql import Row
